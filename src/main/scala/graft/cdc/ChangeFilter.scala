@@ -2,7 +2,7 @@ package graft.cdc
 
 import graft.functions.Canonical
 import graft.model.Model
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Change-data-capture filter: keep an entity iff its id is absent from the
@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * Spark-first formulation: the reference's hash-map probe becomes a keyed
   * left join against the state DataFrame with a null-or-hash-differs
   * predicate. The join key is the entity id, so at scale this is a standard
-  * shuffle join on a high-cardinality key; when the state side is small the
-  * caller can pass `broadcastState = true` to pin a broadcast hash join.
+  * shuffle join on a high-cardinality key.
   */
 object ChangeFilter {
 
@@ -24,35 +23,29 @@ object ChangeFilter {
   def dropMissingId(batch: DataFrame, idCol: String): DataFrame =
     batch.where(col(idCol).isNotNull)
 
+  /** The canonical batch (id, updatedOnMs, attrs) plus its content columns,
+    * computed once per row: `entityJson` is the cached copy without
+    * `updatedOnMs` (reference cache.js:53) and `entityHash` its digest, the
+    * change test's key (cache.js:84). Both are stored as-is by the state
+    * commit.
+    */
+  def withContentColumns(batch: DataFrame): DataFrame =
+    batch
+      .withColumn("entityJson", Canonical.canonicalJsonExcept(col("attrs"), Model.IgnoredProps))
+      .withColumn("entityHash", sha2(col("entityJson"), 256))
+
   /** New-or-updated rows of `batch` w.r.t. `state`.
     *
-    * @param batch   columns: id (idCol), attrs map<string,string> payload
-    * @param state   Model.stateSchema (id, ttl, entityJson, entityHash)
-    * @param batchHash  canonical hash column for the batch row content
-    *                   (use Canonical.canonicalHashExcept to strip
-    *                   updatedOnMs — reference cache.js:53,84)
+    * @param batch  columns: id, entityHash ([[withContentColumns]]), payload
+    * @param state  Model.stateSchema (id, ttl, entityJson, entityHash)
     */
-  def newOrUpdated(
-      batch: DataFrame,
-      state: DataFrame,
-      idCol: String,
-      batchHash: Column,
-      broadcastState: Boolean = false): DataFrame = {
-    val hashed = dropMissingId(batch, idCol).withColumn("__hash", batchHash)
-    val st = {
-      val s = state.select(col("id").as("__sid"), col("entityHash").as("__shash"))
-      if (broadcastState) broadcast(s) else s
-    }
-    hashed
-      .join(st, hashed(idCol) === st("__sid"), "left")
+  def newOrUpdated(batch: DataFrame, state: DataFrame): DataFrame = {
+    val st = state.select(col("id").as("__sid"), col("entityHash").as("__shash"))
+    dropMissingId(batch, "id")
+      .join(st, col("id") === col("__sid"), "left")
       // new (no cached row, cache.js:75-77) or changed (digest differs,
       // cache.js:83-85). Null-safe: a null cached hash never suppresses.
-      .where(col("__sid").isNull || !(col("__shash") <=> col("__hash")))
-      .drop("__sid", "__shash", "__hash")
+      .where(col("__sid").isNull || !(col("__shash") <=> col("entityHash")))
+      .drop("__sid", "__shash")
   }
-
-  /** Convenience for the canonical batch shape (id, updatedOnMs, attrs). */
-  def newOrUpdatedEntities(batch: DataFrame, state: DataFrame, broadcastState: Boolean = false): DataFrame =
-    newOrUpdated(batch, state, "id",
-      Canonical.canonicalHashExcept(col("attrs"), Model.IgnoredProps), broadcastState)
 }

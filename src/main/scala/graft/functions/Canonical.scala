@@ -23,13 +23,23 @@ object Canonical {
     * Null map hashes to null (kept: a null payload is "no content").
     */
   def canonicalHash(attrs: Column): Column =
-    sha2(to_json(array_sort(map_entries(attrs))), 256)
+    sha2(canonicalJson(attrs), 256)
 
-  /** Same, dropping ignored keys (e.g. updatedOnMs) before digesting —
-    * mirrors reference cache.js:53,84.
+  /** The serialization [[canonicalHash]] digests: the key-sorted entries
+    * as a JSON array of `{key, value}` structs.
     */
+  def canonicalJson(attrs: Column): Column =
+    to_json(array_sort(map_entries(attrs)))
+
+  /** [[canonicalJson]] without the ignored keys (e.g. updatedOnMs) — the
+    * cached copy of reference cache.js:53.
+    */
+  def canonicalJsonExcept(attrs: Column, ignored: Seq[String]): Column =
+    canonicalJson(map_filter(attrs, (k, _) => !k.isInCollection(ignored.map(lit(_)))))
+
+  /** Digest of [[canonicalJsonExcept]] — mirrors reference cache.js:53,84. */
   def canonicalHashExcept(attrs: Column, ignored: Seq[String]): Column =
-    canonicalHash(map_filter(attrs, (k, _) => !k.isInCollection(ignored.map(lit(_)))))
+    sha2(canonicalJsonExcept(attrs, ignored), 256)
 
   /** Canonical digest over explicit columns: builds a key-sorted map first so
     * callers can't get order-dependent results by reordering the projection.

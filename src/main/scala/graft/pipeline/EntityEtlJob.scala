@@ -1,14 +1,13 @@
 package graft.pipeline
 
 import graft.cdc.ChangeFilter
-import graft.functions.Canonical
 import graft.model.{EntityType, Model}
 import graft.sink.HttpBatchSink
 import graft.source.EntityApiSource
 import graft.source.EntityApiSource.{Fetcher, Page}
-import graft.state.EntityStateStore
+import graft.state.{EntityStateStore, StateStores}
 import graft.template.TemplateCompiler
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end incremental ETL orchestration — the Spark equivalent of the
@@ -39,20 +38,16 @@ final class EntityEtlJob(
     // compile time (E9; reference templates resolve against process env) —
     // driver-side, so the default sys.env is the env that actually set up
     // the run
-    env: Map[String, String] = sys.env,
-    // Opt-in concurrent per-TYPE orchestration: independent entity types
-    // run on up to `parallelism` driver threads (Spark schedules their
-    // jobs concurrently), each type keeping its own serial page/commit
-    // loop — per-type ordering, checkpoint monotonicity and the
-    // send-before-commit contract are untouched because nothing about a
-    // type's processing changes, only WHEN the driver starts it. Default
-    // 1 = the reference's fully serial loop (app.js:13-21). A 200-type
-    // catalog at cluster widths pays 200× serial wall otherwise — the
-    // cluster can run types concurrently, the reference's driver just
-    // never asks it to.
-    parallelism: Int = 1) {
+    env: Map[String, String] = sys.env) {
 
-  final case class PageStats(fetched: Long, emitted: Long, batches: Long, checkpoint: Long)
+  /** A2 counts for one page (SURVEY.md §2 row A2): `fetched` rows carry an
+    * id, `dropped` rows do not (F3), `emitted` rows were new or changed and
+    * went out in `batches` requests; `checkpoint` is the watermark committed
+    * with the page.
+    */
+  final case class PageStats(fetched: Long, dropped: Long, emitted: Long, batches: Long, checkpoint: Long)
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** The batch-wrapper template rides the same templates map as the entity
     * templates, keyed "targetBody" like the reference's TARGET_BODY_TEMPLATE
@@ -61,38 +56,14 @@ final class EntityEtlJob(
     */
   private val targetBody: Option[String] = templates.get("targetBody")
 
-  /** Run all requested types (empty = all discovered) — serially per type
-    * like the reference at the default `parallelism = 1`, concurrently on
-    * a bounded driver pool above it; types with no template are skipped
-    * (app.js:22-25). Concurrent runs REFUSE duplicate type names loudly:
-    * two same-named types resolve to ONE state directory
-    * ([[EntityStateStore]] keys state by type name), and interleaved
-    * commits on one store would corrupt its checkpoint monotonicity —
-    * the serial path's last-wins map behavior is not a safe meaning to
-    * give a race.
+  /** Run all requested types (empty = all discovered) serially, like the
+    * reference (app.js:13-21); types with no template are skipped
+    * (app.js:22-25).
     */
-  def run(types: Seq[EntityType], requested: Seq[String] = Nil): Map[String, Seq[PageStats]] = {
-    val selected = EntityApiSource.selectTypes(types, requested)
+  def run(types: Seq[EntityType], requested: Seq[String] = Nil): Map[String, Seq[PageStats]] =
+    EntityApiSource.selectTypes(types, requested)
       .filter(t => templates.contains(t.name))
-    if (parallelism <= 1 || selected.size <= 1)
-      selected.map(t => t.name -> runType(t)).toMap
-    else {
-      val dups = selected.groupBy(_.name).collect { case (n, ts) if ts.size > 1 => n }
-      require(dups.isEmpty,
-        s"EntityEtlJob.run(parallelism=$parallelism): duplicate entity type " +
-          s"name(s) ${dups.mkString(", ")} share a state path — concurrent " +
-          "commits on one store would interleave; dedupe the type list")
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, selected.size))
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.sequence(selected.map(t => Future(t.name -> runType(t)))),
-          scala.concurrent.duration.Duration.Inf).toMap
-      } finally pool.shutdown()
-    }
-  }
+      .map(t => t.name -> runType(t)).toMap
 
   /** The do-while pagination loop for one type (reference app.js:48-59). */
   def runType(entityType: EntityType): Seq[PageStats] = {
@@ -109,57 +80,56 @@ final class EntityEtlJob(
     stats.result()
   }
 
-  /** One page end-to-end: filter, transform, send, commit. */
+  /** One page end-to-end: filter, transform, send, commit.
+    *
+    * Every per-page fact is computed once. The parsed page is cached with
+    * its canonical content columns (`entityJson`, `entityHash`), which the
+    * CDC test and the state commit share. One last-write-wins pass
+    * ([[StateStores.dedupNewestPerId]]) feeds both the send and the commit,
+    * so the version posted for an id is the version cached for it. The A2
+    * counts and the checkpoint max are observed metrics of the send job
+    * (df.observe): the page observation sits ahead of the missing-id
+    * filter, because the checkpoint is a max over ALL fetched items
+    * (reference cache.js:100).
+    */
   def processPage(entityType: EntityType, page: Page, prevCheckpoint: Long): PageStats = {
     val (state, _) = store.load(entityType.name)
-    // cache: the raw batch feeds the checkpoint calc, the CDC filter, the
-    // send AND the state commit
-    val batch = EntityApiSource.pageToDf(spark, page, entityType).cache()
-    val valid = ChangeFilter.dropMissingId(batch, "id")
+    val batch = ChangeFilter.withContentColumns(EntityApiSource.pageToDf(spark, page, entityType)).cache()
+    try {
+      val pageObs = new Observation(s"graft-page-${System.nanoTime()}")
+      val observed = batch.observe(pageObs, count(lit(1)).as("rows"), count(col("id")).as("fetched"),
+        max(col(Model.UpdatedOnMs)).as("maxUpdatedOnMs"))
+      val newest = StateStores.dedupNewestPerId(ChangeFilter.dropMissingId(observed, "id"))
 
-    // within-page LWW before the SEND: a page repeating an id must post ONE
-    // version (the newest). The reference's serial cache loop emits deduped
-    // and in order; here partitions post in PARALLEL, so emitting every
-    // version could apply the stale one last at the target. (The state
-    // commit already dedups its own input the same way.)
-    val lww = valid.withColumn("__rn",
-        org.apache.spark.sql.functions.row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("id")
-            .orderBy(col(Model.UpdatedOnMs).desc_nulls_last,
-              Canonical.canonicalHashExcept(col("attrs"), Model.IgnoredProps).desc)))
-      .where(col("__rn") === 1).drop("__rn")
-    val changed = ChangeFilter.newOrUpdatedEntities(lww, state).cache()
+      // T1: compile this type's template once into a single Column
+      val doc: Column = TemplateCompiler.compileTemplate(
+        templates(entityType.name), TemplateCompiler.mapResolver(col("attrs"), env), escapeHtml)
+      val sendObs = new Observation(s"graft-send-${System.nanoTime()}")
+      val batches = HttpBatchSink.send(
+        ChangeFilter.newOrUpdated(newest, state)
+          .observe(sendObs, count(lit(1)).as("emitted")).select(doc.as("doc")),
+        maxBatchSize, senderFactory, targetBody)
+      val emitted = sendObs.get("emitted").asInstanceOf[Long]
+      val counts = pageObs.get
+      val rows = counts("rows").asInstanceOf[Long]
+      val fetched = counts("fetched").asInstanceOf[Long]
+      val dropped = rows - fetched
+      val maxUpdated = Option(counts("maxUpdatedOnMs")).map(_.asInstanceOf[Long])
+      // the reference's frozen-checkpoint warning (cache.js:109-112)
+      if (rows > 0 && maxUpdated.isEmpty)
+        log.warn(s"${entityType.name}: none of $rows fetched items has a valid " +
+          s"${Model.UpdatedOnMs}; the checkpoint cannot advance from $prevCheckpoint")
+      val nextCkpt = EntityStateStore.nextCheckpoint(maxUpdated, prevCheckpoint, page.partialResults)
 
-    // A2 counts ride the send job as observed metrics (df.observe) instead
-    // of separate count() actions — one job materializes send + both counts
-    val obs = new org.apache.spark.sql.Observation(s"graft-page-${System.nanoTime()}")
+      // commit AFTER send (W2). All fetched ids get a TTL refresh
+      // (cache.js:79 runs before the change test), cached copy minus
+      // updatedOnMs (cache.js:53).
+      store.commit(entityType.name, newest, now(), ttlMs, nextCkpt,
+        preloadedState = Some(state)) // one state scan per page, not two
 
-    // T1: compile this type's template once into a single Column
-    val doc: Column = TemplateCompiler.compileTemplate(
-      templates(entityType.name), TemplateCompiler.mapResolver(col("attrs"), env), escapeHtml)
-    val batches = HttpBatchSink.send(
-      changed.observe(obs, count(lit(1)).as("emitted")).select(doc.as("doc")),
-      maxBatchSize, senderFactory, targetBody)
-    val emitted = obs.get("emitted").asInstanceOf[Long]
-
-    // commit AFTER send (W2). All fetched ids get a TTL refresh
-    // (cache.js:79 runs before the change test), cached copy minus
-    // updatedOnMs (cache.js:53).
-    val nowMs = now()
-    val strippedAttrs = map_filter(col("attrs"), (k, _) => k =!= Model.UpdatedOnMs)
-    val toCommit = valid.select(
-      col("id"),
-      col(Model.UpdatedOnMs), // LWW dedup inside commit keeps the newest version per id
-      to_json(array_sort(map_entries(strippedAttrs))).as("entityJson"),
-      Canonical.canonicalHashExcept(col("attrs"), Model.IgnoredProps).as("entityHash"))
-    // checkpoint = max over ALL fetched items, including rows the
-    // missing-id filter dropped (reference cache.js:100 counts every item)
-    val nextCkpt = store.nextCheckpoint(batch, Model.UpdatedOnMs, prevCheckpoint, page.partialResults)
-    store.commit(entityType.name, toCommit, nowMs, ttlMs, nextCkpt,
-      preloadedState = Some(state)) // one state scan per page, not two
-
-    val fetched = valid.count()
-    batch.unpersist(); changed.unpersist()
-    PageStats(fetched, emitted, batches, nextCkpt)
+      log.info(s"${entityType.name}: fetched=$fetched dropped=$dropped " +
+        s"emitted=$emitted batches=$batches checkpoint $prevCheckpoint -> $nextCkpt")
+      PageStats(fetched, dropped, emitted, batches, nextCkpt)
+    } finally batch.unpersist()
   }
 }

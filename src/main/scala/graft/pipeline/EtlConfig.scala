@@ -94,7 +94,9 @@ object EtlConfig {
     * config — fetcher, sender, TTL and batch size all from the file, same
     * construction order as the reference's handleEntityType (app.js:44-60).
     * Types run serially in the reference; callers loop types and build one
-    * job each (the target URL is type-templated).
+    * job each (the target URL is type-templated). `env` serves every
+    * `{{env.X}}`: request headers per request, the target URL and entity
+    * templates once, here.
     */
   def buildJob(
       spark: SparkSession, store: EntityStateStore, cfg: EtlConfig,
@@ -109,6 +111,7 @@ object EtlConfig {
         cfg.targetUrlFor(typeName, envNow), cfg.targetMethod, cfg.targetHeaders, env = env),
       templates = templates,
       maxBatchSize = cfg.maxBatchSize,
-      ttlMs = cfg.ttlMs)
+      ttlMs = cfg.ttlMs,
+      env = envNow)
   }
 }

@@ -46,22 +46,8 @@ object HttpBatchSink {
   def httpSender(url: String, method: String, headers: Map[String, String],
                  timeout: Duration = Duration.ofSeconds(60),
                  env: () => Map[String, String] = { val snap = sys.env; () => snap }): SenderFactory = {
-    // construction-time fail-fast: malformed header templates and env vars
-    // missing at startup are config errors, not per-request 401s
-    graft.template.TemplateCompiler.validateHeaderTemplates(headers, env())
-    () => {
-      val client = HttpClient.newBuilder().connectTimeout(timeout).build()
-      body => {
-        val b = HttpRequest.newBuilder(URI.create(url)).timeout(timeout)
-          .method(method, HttpRequest.BodyPublishers.ofString(body))
-        val e = env()
-        headers.foreach { case (k, v) =>
-          b.header(k, graft.template.TemplateCompiler.renderWithEnv(v, Map.empty, e))
-        }
-        val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
-        require(resp.statusCode / 100 == 2, s"$method $url -> HTTP ${resp.statusCode}")
-      }
-    }
+    val transport = httpTransport(url, method, headers, timeout, env)
+    () => { val send = transport(); body => send(Nil, body) }
   }
 
   /** Keyed transport for effectively-once delivery:
@@ -78,17 +64,30 @@ object HttpBatchSink {
                       timeout: Duration = Duration.ofSeconds(60),
                       env: () => Map[String, String] = { val snap = sys.env; () => snap })
     : KeyedSenderFactory = {
+    val transport = httpTransport(url, method, headers, timeout, env)
+    () => { val send = transport(); (key, body) => send(Seq(keyHeader -> key), body) }
+  }
+
+  /** The one request builder behind both transports: (extra headers, body)
+    * => Unit, one client per partition. Header templates render per
+    * request; a non-2xx response throws.
+    */
+  private def httpTransport(url: String, method: String, headers: Map[String, String],
+                            timeout: Duration, env: () => Map[String, String])
+    : () => (Seq[(String, String)], String) => Unit = {
+    // construction-time fail-fast: malformed header templates and env vars
+    // missing at startup are config errors, not per-request 401s
     graft.template.TemplateCompiler.validateHeaderTemplates(headers, env())
     () => {
       val client = HttpClient.newBuilder().connectTimeout(timeout).build()
-      (key, body) => {
+      (extra, body) => {
         val b = HttpRequest.newBuilder(URI.create(url)).timeout(timeout)
           .method(method, HttpRequest.BodyPublishers.ofString(body))
         val e = env()
         headers.foreach { case (k, v) =>
           b.header(k, graft.template.TemplateCompiler.renderWithEnv(v, Map.empty, e))
         }
-        b.header(keyHeader, key)
+        extra.foreach { case (k, v) => b.header(k, v) }
         val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
         require(resp.statusCode / 100 == 2, s"$method $url -> HTTP ${resp.statusCode}")
       }
@@ -104,29 +103,11 @@ object HttpBatchSink {
     *         at-least-once delivery contract (W2).
     */
   def send(docs: DataFrame, maxBatchSize: Int, senderFactory: SenderFactory,
-           targetBody: Option[String] = None): Long = {
-    require(maxBatchSize > 0, "maxBatchSize must be positive")
-    val sent: LongAccumulator = docs.sparkSession.sparkContext.longAccumulator("graft.batchesSent")
-    val colName = docs.columns.head
-    // targetBody is replaceable data like every other template
-    // (reference templates.js:43, app.js:106); the default fast path is the
-    // shipped targetBody.hbs:2 semantics as a plain mkString
-    val assemble: Seq[String] => String = targetBody match {
-      case Some(t) => chunk => graft.template.TemplateCompiler.renderBatchBody(t, chunk)
-      case None    => chunk => chunk.mkString("[", ",", "]")
+           targetBody: Option[String] = None): Long =
+    sendBatches(docs, maxBatchSize, targetBody) { () =>
+      val send = senderFactory()
+      (_, body) => send(body)
     }
-    docs.select(col(colName).cast("string")).foreachPartition {
-      (it: Iterator[org.apache.spark.sql.Row]) =>
-        if (it.hasNext) {
-          val send = senderFactory()
-          it.map(_.getString(0)).grouped(maxBatchSize).foreach { chunk =>
-            send(assemble(chunk))
-            sent.add(1)
-          }
-        }
-    }
-    sent.value
-  }
 
   /** The at-least-once → EFFECTIVELY-ONCE upgrade the reference's design
     * keeps promising and never ships ("the idempotent target method makes
@@ -166,38 +147,49 @@ object HttpBatchSink {
     */
   def sendIdempotent(docs: DataFrame, maxBatchSize: Int,
                      senderFactory: KeyedSenderFactory, context: String,
-                     targetBody: Option[String] = None): Long = {
+                     targetBody: Option[String] = None): Long =
+    sendBatches(docs, maxBatchSize, targetBody) { () =>
+      val send = senderFactory()
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      // (partition id, batch ordinal) ride the key alongside the body
+      // hash: two DISTINCT batches with identical bodies under one
+      // checkpoint must not share a key (an idempotency-honoring
+      // append target would apply only one — silent loss). Both are
+      // stable across task retries for a deterministic plan, so
+      // replays still collide as the contract requires.
+      val pid = org.apache.spark.TaskContext.getPartitionId()
+      (ordinal, body) => {
+        md.reset()
+        md.update(context.getBytes("UTF-8"))
+        md.update(0.toByte) // unambiguous context/body separator
+        md.update(s"$pid:$ordinal".getBytes("UTF-8"))
+        md.update(0.toByte)
+        md.update(body.getBytes("UTF-8"))
+        send(md.digest().map("%02x".format(_)).mkString, body)
+      }
+    }
+
+  /** The one batching loop behind [[send]] and [[sendIdempotent]]: each
+    * non-empty partition opens one poster (ordinal, body) => Unit and posts
+    * its rows in <=maxBatchSize chunks. targetBody is replaceable data like
+    * every other template (reference templates.js:43, app.js:106); the
+    * default fast path is the shipped targetBody.hbs:2 semantics as a plain
+    * mkString.
+    */
+  private def sendBatches(docs: DataFrame, maxBatchSize: Int, targetBody: Option[String])
+                         (open: () => (Long, String) => Unit): Long = {
     require(maxBatchSize > 0, "maxBatchSize must be positive")
     val sent: LongAccumulator = docs.sparkSession.sparkContext.longAccumulator("graft.batchesSent")
-    val colName = docs.columns.head
     val assemble: Seq[String] => String = targetBody match {
       case Some(t) => chunk => graft.template.TemplateCompiler.renderBatchBody(t, chunk)
       case None    => chunk => chunk.mkString("[", ",", "]")
     }
-    docs.select(col(colName).cast("string")).foreachPartition {
+    docs.select(col(docs.columns.head).cast("string")).foreachPartition {
       (it: Iterator[org.apache.spark.sql.Row]) =>
         if (it.hasNext) {
-          val send = senderFactory()
-          val md = java.security.MessageDigest.getInstance("SHA-256")
-          // (partition id, batch ordinal) ride the key alongside the body
-          // hash: two DISTINCT batches with identical bodies under one
-          // checkpoint must not share a key (an idempotency-honoring
-          // append target would apply only one — silent loss). Both are
-          // stable across task retries for a deterministic plan, so
-          // replays still collide as the contract requires.
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var ordinal = 0L
-          it.map(_.getString(0)).grouped(maxBatchSize).foreach { chunk =>
-            val body = assemble(chunk)
-            md.reset()
-            md.update(context.getBytes("UTF-8"))
-            md.update(0.toByte) // unambiguous context/body separator
-            md.update(s"$pid:$ordinal".getBytes("UTF-8"))
-            md.update(0.toByte)
-            md.update(body.getBytes("UTF-8"))
-            val key = md.digest().map("%02x".format(_)).mkString
-            ordinal += 1
-            send(key, body)
+          val post = open()
+          it.map(_.getString(0)).grouped(maxBatchSize).zipWithIndex.foreach { case (chunk, i) =>
+            post(i.toLong, assemble(chunk))
             sent.add(1)
           }
         }

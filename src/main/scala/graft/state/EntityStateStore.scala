@@ -2,7 +2,6 @@ package graft.state
 
 import graft.model.Model
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
@@ -17,10 +16,6 @@ import java.util.Comparator
   * (no transactional table format in the offline env — SURVEY.md §7.5
   * risk 4), preserving the reference's page-granular commit ordering
   * (reference app.js:57-58 commits after *each* page).
-  *
-  * At 100 TB scale the state table is the big join side of the CDC filter;
-  * it is written partitioned by `bucket`(id) so re-reads co-partition with
-  * the batch join without a full shuffle of state.
   */
 final class EntityStateStore(spark: SparkSession, root: String) {
 
@@ -42,20 +37,6 @@ final class EntityStateStore(spark: SparkSession, root: String) {
     (df, ckpt)
   }
 
-  /** Next checkpoint from a fetched page, replicating reference semantics
-    * (cache.js:100-117 — SURVEY.md §2 row A1, §2.10 W4):
-    *  - max(updatedOnMs) over ALL fetched items (not just new/updated);
-    *  - null/absent max  -> keep previous checkpoint (frozen, with the
-    *    reference's warning semantics);
-    *  - stall-breaker: partialResults and checkpoint did not advance ->
-    *    bump by 1 ms so the pagination loop terminates.
-    */
-  def nextCheckpoint(fetchedPage: DataFrame, updatedOnCol: String, prev: Long, partialResults: Boolean): Long = {
-    val maxRow = fetchedPage.agg(max(col(updatedOnCol).cast("long"))).head()
-    val next = if (maxRow.isNullAt(0)) prev else math.max(prev, maxRow.getLong(0))
-    if (partialResults && next == prev) prev + 1L else next
-  }
-
   /** Commit one page (reference updateCache cache.js:44-58 + saveCache
     * cache.js:37-42, called per page app.js:57-58):
     *
@@ -68,9 +49,11 @@ final class EntityStateStore(spark: SparkSession, root: String) {
     *  4. swap the parquet dir + checkpoint file.
     *
     * `batch` columns: id, entityJson, entityHash (updatedOnMs already
-    * stripped from json/hash by the caller — cache.js:53; pass it as an
-    * extra `updatedOnMs` column so intra-page dedup keeps the NEWEST
-    * version, matching the reference's last-item-in-page-order overwrite).
+    * stripped from json/hash by the caller — cache.js:53, see
+    * [[graft.cdc.ChangeFilter.withContentColumns]]; pass it as an extra
+    * `updatedOnMs` column so intra-page dedup keeps the NEWEST version,
+    * matching the reference's last-item-in-page-order overwrite). Other
+    * columns are ignored; an already deduplicated batch passes unchanged.
     */
   def commit(
       entityType: String,
@@ -140,4 +123,21 @@ final class EntityStateStore(spark: SparkSession, root: String) {
 
   private def deleteRecursively(p: Path): Unit =
     Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
+}
+
+object EntityStateStore {
+
+  /** Next checkpoint from a fetched page's `max(updatedOnMs)`, replicating
+    * reference semantics (cache.js:100-117 — SURVEY.md §2 row A1, §2.10 W4):
+    *  - the max is over ALL fetched items (not just new/updated), so the
+    *    caller observes it ahead of the missing-id filter;
+    *  - no valid max -> keep the previous checkpoint (frozen; the caller
+    *    logs the reference's warning);
+    *  - stall-breaker: partialResults and checkpoint did not advance ->
+    *    bump by 1 ms so the pagination loop terminates.
+    */
+  def nextCheckpoint(observedMax: Option[Long], prev: Long, partialResults: Boolean): Long = {
+    val next = observedMax.fold(prev)(math.max(prev, _))
+    if (partialResults && next == prev) prev + 1L else next
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Shared state-store helpers. */
-private[state] object StateStores {
+private[graft] object StateStores {
 
   /** A page can repeat an id (overlapping fetches); keep one row per id —
     * the NEWEST version wins (last-write-wins), matching the reference's

@@ -3,7 +3,7 @@ package graft
 import graft.cdc.ChangeFilter
 import graft.functions.Canonical
 import graft.model.Model
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CDC matrix, 1:1 with the reference's cache tests
@@ -22,6 +22,9 @@ class ChangeFilterSpec extends SparkSpec {
       to_json(col("attrs")).as("entityJson"),
       Canonical.canonicalHashExcept(col("attrs"), Model.IgnoredProps).as("entityHash"))
 
+  private def changed(batch: DataFrame, state: DataFrame) =
+    ChangeFilter.newOrUpdated(ChangeFilter.withContentColumns(batch), state)
+
   test("CDC matrix: only-updatedOnMs-changed suppressed, content-changed and new emitted") {
     val state = stateOf(Seq(
       "1" -> Map("id" -> "1", "x" -> "11", "updatedOnMs" -> "10"),
@@ -32,7 +35,7 @@ class ChangeFilterSpec extends SparkSpec {
       "2" -> Map("id" -> "2", "x" -> "24", "updatedOnMs" -> "21"), // content changed -> emitted
       "3" -> Map("id" -> "3", "x" -> "13", "updatedOnMs" -> "30"), // identical       -> suppressed
       "4" -> Map("id" -> "4", "x" -> "14", "updatedOnMs" -> "40"))) // new            -> emitted
-    val out = ChangeFilter.newOrUpdatedEntities(batch, state).select("id")
+    val out = changed(batch, state).select("id")
       .as[String].collect().sorted
     assert(out.toSeq == Seq("2", "4"))
   }
@@ -42,7 +45,7 @@ class ChangeFilterSpec extends SparkSpec {
       (null.asInstanceOf[String], Some(1L), Map("x" -> "no-id")),
       ("5", Some(2L), Map("id" -> "5", "x" -> "15"))).toDF("id", Model.UpdatedOnMs, "attrs")
     val state = stateOf(Nil)
-    val out = ChangeFilter.newOrUpdatedEntities(batch, state).select("id").as[String].collect()
+    val out = changed(batch, state).select("id").as[String].collect()
     assert(out.toSeq == Seq("5"))
   }
 
@@ -50,16 +53,16 @@ class ChangeFilterSpec extends SparkSpec {
     val state = stateOf(Seq("1" -> Map("a" -> "1", "b" -> "2")))
     // same content, different construction order
     val batch = batchDf(Seq("1" -> Map("b" -> "2", "a" -> "1")))
-    assert(ChangeFilter.newOrUpdatedEntities(batch, state).count() == 0)
+    assert(changed(batch, state).count() == 0)
   }
 
-  test("broadcast mode produces identical results") {
-    val state = stateOf(Seq("1" -> Map("x" -> "1")))
-    val batch = batchDf(Seq("1" -> Map("x" -> "2"), "2" -> Map("x" -> "9")))
-    val a = ChangeFilter.newOrUpdatedEntities(batch, state, broadcastState = false)
-      .select("id").as[String].collect().sorted.toSeq
-    val b = ChangeFilter.newOrUpdatedEntities(batch, state, broadcastState = true)
-      .select("id").as[String].collect().sorted.toSeq
-    assert(a == b && a == Seq("1", "2"))
+  test("content columns: stored entityJson is the key-sorted entries without updatedOnMs, entityHash its SHA-256") {
+    val out = ChangeFilter.withContentColumns(batchDf(Seq(
+      "1" -> Map("x" -> "2", "id" -> "1", "updatedOnMs" -> "7"))))
+      .select("entityJson", "entityHash").as[(String, String)].collect().toSeq
+    val json = """[{"key":"id","value":"1"},{"key":"x","value":"2"}]"""
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(out == Seq((json, sha)))
   }
 }

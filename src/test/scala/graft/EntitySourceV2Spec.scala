@@ -306,7 +306,8 @@ class EntitySourceV2Spec extends SparkSpec {
     val batch = read()
     val state = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       graft.model.Model.stateSchema)
-    val changed = graft.cdc.ChangeFilter.newOrUpdatedEntities(batch.dropDuplicates("id"), state)
+    val changed = graft.cdc.ChangeFilter.newOrUpdated(
+      graft.cdc.ChangeFilter.withContentColumns(batch.dropDuplicates("id")), state)
     assert(changed.count() == 3)
   }
 }

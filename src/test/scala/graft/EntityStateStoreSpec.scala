@@ -51,16 +51,20 @@ class EntityStateStoreSpec extends SparkSpec {
   }
 
   test("nextCheckpoint: max over ALL fetched rows; invalid keeps prev; stall bumps (cache.js:100-117)") {
-    val store = freshStore()
-    val page = Seq(("a", 10L), ("b", 30L), ("c", 20L)).toDF("id", "updatedOnMs")
-    assert(store.nextCheckpoint(page, "updatedOnMs", prev = 5, partialResults = false) == 30)
-    val empty = page.where(lit(false))
-    assert(store.nextCheckpoint(empty, "updatedOnMs", prev = 5, partialResults = false) == 5)
+    import EntityStateStore.nextCheckpoint
+    // the observed max (over every fetched row, PipelineSpec's dropped-row
+    // page checks that) advances the checkpoint, never backwards
+    assert(nextCheckpoint(Some(30L), prev = 5, partialResults = false) == 30)
+    assert(nextCheckpoint(Some(3L), prev = 5, partialResults = false) == 5)
+    // no valid updatedOnMs on the page -> the checkpoint stays
+    assert(nextCheckpoint(None, prev = 5, partialResults = false) == 5)
     // stall-breaker: partial results but checkpoint did not advance -> +1ms
-    assert(store.nextCheckpoint(page.withColumn("updatedOnMs", lit(5L)),
-      "updatedOnMs", prev = 5, partialResults = true) == 6)
+    assert(nextCheckpoint(Some(5L), prev = 5, partialResults = true) == 6)
+    assert(nextCheckpoint(None, prev = 5, partialResults = true) == 6)
     // reference fixture: checkpoint 30 + stall -> 31 (cache.test.js:76-82)
-    assert(store.nextCheckpoint(page, "updatedOnMs", prev = 30, partialResults = true) == 31)
+    assert(nextCheckpoint(Some(30L), prev = 30, partialResults = true) == 31)
+    // no bump when the page was the last one
+    assert(nextCheckpoint(Some(30L), prev = 30, partialResults = false) == 30)
   }
 
   test("commit survives repeated ids within one page (overlap re-fetch, W3)") {

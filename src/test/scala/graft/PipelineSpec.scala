@@ -1,17 +1,23 @@
 package graft
 
+import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.model.EntityType
-import graft.pipeline.EntityEtlJob
+import graft.pipeline.{EntityEtlJob, EtlConfig}
 import graft.sink.HttpBatchSink
 import graft.source.EntityApiSource
 import graft.state.EntityStateStore
+import java.net.InetSocketAddress
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline behavior with a stubbed API + collecting sink:
   * pagination (S3/W4), CDC suppression across pages (F2), at-least-once
-  * ordering (W2: send fails => state NOT committed), batch slicing (K1).
+  * ordering (W2: send fails => state NOT committed), batch slicing (K1),
+  * per-page counts (A2) and the page's Spark actions.
   */
 object PipelineSpec {
   // static collectors: executors share the JVM in local mode
@@ -86,61 +92,6 @@ class PipelineSpec extends SparkSpec {
     assert(stats.head.emitted == 1 && store.load("t")._2 == 10)
   }
 
-  test("parallelism=4 run ≡ serial run: per-type PageStats and final state identical") {
-    sentBodies.clear(); failSends = false
-    val names = (0 until 4).map(i => s"pt$i")
-    // per-type two-page feeds with DISTINCT ids/timestamps so any
-    // cross-type state bleed would shift a checkpoint or a count
-    def pagesFor(i: Int): Map[Long, EntityApiSource.Page] = Map(
-      1L -> EntityApiSource.Page(
-        Seq(entity(100 * i + 1, s"a$i", 10 + i), entity(100 * i + 2, s"b$i", 20 + i)),
-        partialResults = true),
-      (20L + i) -> EntityApiSource.Page(
-        Seq(entity(100 * i + 3, s"c$i", 30 + i)), partialResults = false))
-    val fetch: EntityApiSource.Fetcher = url => {
-      val tpe = url.split("type=")(1).split("&")(0)
-      val ckpt = url.split("updatedFromMs=")(1).toLong
-      val page = pagesFor(tpe.stripPrefix("pt").toInt)
-        .getOrElse(ckpt, EntityApiSource.Page(Nil, partialResults = false))
-      s"""{"items": ${page.items.mkString("[", ",", "]")}, "partialResults": ${page.partialResults}}"""
-    }
-    def mk(root: String, par: Int) = new EntityEtlJob(spark,
-      new EntityStateStore(spark, root), fetch,
-      entitiesUrlTemplate = "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}",
-      senderFactory = collectingSender,
-      templates = names.map(_ -> tpl).toMap,
-      maxBatchSize = 2, ttlMs = 1000000, now = () => 5000, parallelism = par)
-    val types = names.map(n => EntityType(n, "id"))
-    val serialRoot = Files.createTempDirectory("pl-ser").toString
-    val parRoot = Files.createTempDirectory("pl-par").toString
-    val serial = mk(serialRoot, 1).run(types)
-    val parallel = mk(parRoot, 4).run(types)
-    assert(parallel == serial,
-      s"per-type stats diverge under parallelism=4: $parallel vs $serial")
-    names.foreach { n =>
-      val (ss, sc) = new EntityStateStore(spark, serialRoot).load(n)
-      val (ps, pc) = new EntityStateStore(spark, parRoot).load(n)
-      assert(pc == sc, s"checkpoint diverges for $n")
-      val key = ss.columns.toSeq
-      assert(ps.collect().map(_.toString).sorted.toSeq ==
-        ss.collect().map(_.toString).sorted.toSeq, s"state diverges for $n ($key)")
-    }
-  }
-
-  test("parallel run refuses duplicate type names (cross-type state-path collision)") {
-    sentBodies.clear(); failSends = false
-    val store = new EntityStateStore(spark, Files.createTempDirectory("pl-dup").toString)
-    val job = new EntityEtlJob(spark, store,
-      url => """{"items": [], "partialResults": false}""",
-      entitiesUrlTemplate = "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}",
-      senderFactory = collectingSender, templates = Map("t" -> tpl),
-      maxBatchSize = 2, ttlMs = 1000000, now = () => 5000, parallelism = 2)
-    val dup = Seq(EntityType("t", "id"), EntityType("t", "id"))
-    val e = intercept[IllegalArgumentException] { job.run(dup) }
-    assert(e.getMessage.contains("state path"),
-      s"expected loud state-path collision refusal, got: ${e.getMessage}")
-  }
-
   test("types without a template are skipped (app.js:22-25); CLI filter respected (F1)") {
     sentBodies.clear(); failSends = false
     val store = new EntityStateStore(spark, Files.createTempDirectory("pl3").toString)
@@ -150,8 +101,88 @@ class PipelineSpec extends SparkSpec {
     assert(job.run(Seq(EntityType("t", "id")), requested = Seq("other")).isEmpty)
   }
 
+  test("page stats: id-less rows count as dropped and still move the checkpoint (A2, cache.js:100)") {
+    sentBodies.clear(); failSends = false
+    val store = new EntityStateStore(spark, Files.createTempDirectory("pl-drop").toString)
+    val pages = Map(
+      1L -> EntityApiSource.Page(
+        Seq(entity(1, "a", 10), """{"x": "no-id", "updatedOnMs": 50}""", entity(2, "b", 20)),
+        partialResults = true),
+      // no row carries an id: pageToDf maps the missing column to null ids
+      50L -> EntityApiSource.Page(Seq("""{"x": "no-id", "updatedOnMs": 60}"""), partialResults = false))
+    val stats = mkJob(store, pages).runType(EntityType("t", "id"))
+    assert(stats.map(s => (s.fetched, s.dropped, s.emitted)) == Seq((2, 1, 2), (0, 1, 0)))
+    // the max runs over ALL fetched rows, the dropped ones included
+    assert(stats.map(_.checkpoint) == Seq(50, 60) && store.load("t")._2 == 60)
+  }
+
+  test("intra-page LWW tie: the posted version is the cached version, in either page order") {
+    val a = """{"id": "a", "x": "p", "updatedOnMs": 10}"""
+    val b = """{"id": "a", "x": "q", "updatedOnMs": 10}"""
+    val outcomes = Seq(Seq(a, b), Seq(b, a)).map { items =>
+      sentBodies.clear(); failSends = false
+      val store = new EntityStateStore(spark, Files.createTempDirectory("pl-tie").toString)
+      mkJob(store, Map(1L -> EntityApiSource.Page(items, partialResults = false)))
+        .runType(EntityType("t", "id"))
+      val posted = sentBodies.asScala.toSeq.flatMap(b => """"x": "(\w)"""".r.findAllMatchIn(b).map(_.group(1)))
+      val cached = store.load("t")._1.select("entityJson").collect().toSeq
+        .flatMap(r => """"key":"x","value":"(\w)"""".r.findAllMatchIn(r.getString(0)).map(_.group(1)))
+      assert(posted.size == 1 && posted == cached,
+        s"posted $posted but cached $cached for page order ${items.mkString(", ")}")
+      posted.head
+    }
+    assert(outcomes.distinct.size == 1, s"the tie-break depends on page order: $outcomes")
+  }
+
+  test("processPage runs no head or count: only the source read, the send and the commit") {
+    sentBodies.clear(); failSends = false
+    val store = new EntityStateStore(spark, Files.createTempDirectory("pl-actions").toString)
+    val job = mkJob(store, Map.empty)
+    val page = EntityApiSource.Page(Seq(entity(1, "a", 10), entity(2, "b", 20)), partialResults = false)
+    val actions = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = actions.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = actions.add(funcName)
+    }
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      job.processPage(EntityType("t", "id"), page, prevCheckpoint = 1L)
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val seen = actions.asScala.toSeq
+    assert(!seen.contains("head") && !seen.contains("count"), s"page actions: $seen")
+    // the source read (JSON schema inference), the send, the commit's write
+    assert(seen == Seq("rdd", "foreachPartition", "command"), s"page actions: $seen")
+    assert(store.load("t")._2 == 20 && store.load("t")._1.count() == 2)
+  }
+
+  test("EtlConfig.buildJob renders {{env.X}} in entity templates from its env") {
+    val posted = new ConcurrentLinkedQueue[String]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/load", new HttpHandler {
+      override def handle(ex: HttpExchange): Unit = {
+        posted.add(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
+        ex.sendResponseHeaders(200, -1); ex.close()
+      }
+    })
+    server.start()
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val cfg = EtlConfig.fromJson(
+        s"""{"sfx": {"server": "$base", "entitiesEndpoint": "/v2/entities?type={{type}}&updatedFromMs={{updatedFromMs}}"},
+           | "target": {"server": "$base", "entitiesEndpoint": "/load"}}""".stripMargin)
+      val job = EtlConfig.buildJob(spark,
+        new EntityStateStore(spark, Files.createTempDirectory("pl-env").toString),
+        cfg, Map("vm" -> """{"v": "{{env.BAR}}"}"""), "vm",
+        env = () => Map("FOO" -> "f", "BAR" -> "b"))
+      job.processPage(EntityType("vm", "id"),
+        EntityApiSource.Page(Seq(entity(1, "a", 10)), partialResults = false), prevCheckpoint = 1L)
+    } finally server.stop(0)
+    assert(posted.asScala.toSeq == Seq("""[{"v": "b"}]"""))
+  }
+
   test("EtlConfig loads the reference config.json shape (config.json:1-23, app.js:11)") {
-    import graft.pipeline.EtlConfig
     // the real reference config is the golden input, like the .hbs goldens
     val cfg = EtlConfig.load(java.nio.file.Paths.get("/root/reference/config.json"))
     assert(cfg.logLevel == "info")
@@ -179,7 +210,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("resolveUrl: an absolute endpoint replaces the server's base path (node url.resolve)") {
-    import graft.pipeline.EtlConfig
     val cfg = EtlConfig.fromJson(
       """{"sfx": {"server": "https://host/api", "entitiesEndpoint": "/v2/entities?type={{type}}"}}""")
     // node: url.resolve("https://host/api", "/v2/...") == "https://host/v2/..."
