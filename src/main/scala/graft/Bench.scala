@@ -42,57 +42,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // register each input table once as a cached temp view: every query
-    // shares one scan per table instead of re-reading parquet per query.
-    //
-    // Partitioning (r16, guide §2.5/§6.1): the sf fixtures are single
-    // small parquet files, so the default scan yields ONE input partition
-    // (three for lineitem) and every query's pre-exchange pipeline —
-    // normalize/shingle/md5 explodes, the most compute-dense spans of the
-    // registry — ran single-threaded (measured: x2_allpairs_jaccard spent
-    // 8.4 s of 10.6 s in two 1-task stages). A production table arrives
-    // in thousands of splits; the local 1-split layout is a fixture
-    // artifact, not a property of the queries. The cache layout is made
-    // scale-ADAPTIVE: partitions derive from the table's own row count
-    // and the session's core count (never a constant), so the driver's
-    // lower-core bench run keeps its proportional layout and sub-
-    // core-count tables (region, nation) stay single-partition instead
-    // of paying 32 near-empty cache partitions per scan. Row order inside
-    // partitions changes; every registered query is order-insensitive by
-    // house discipline (order-free aggregates, explicit output sorts —
-    // the same property the oracle hash gate already relies on).
-    // Materialization (count) stays outside the timed region, as before.
-    // Per-row compute density drives the split rule (measured r16): the
-    // text/vector tables (KB documents, 64-dim vectors) are consumed by
-    // explode/score pipelines worth full parallelism at a few thousand
-    // rows, while relational tables are consumed by exchange-bound
-    // aggregates/joins where extra map partitions ADD cost (more blocks,
-    // more partial-buffer merges — measured: a 32-partition cache put
-    // +0.9..+1.5 s on each sketch/distinct-join query while winning
-    // nothing they needed).
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    val rowsPerPart = Map("documents" -> 64L, "embeddings" -> 64L)
-      .withDefaultValue(16384L)
-    // SPARK_GRAFT_BENCH_FLAT=1 disables the adaptive repartition (raw
-    // fixture layout) — the interleaved-A/B knob for attributing a
-    // per-query delta to the cache LAYOUT vs the query code (BASELINE.md
-    // protocol; r16's three 32-core layout regressions). Default layout
-    // behavior is unchanged.
-    val flatLayout = sys.env.get("SPARK_GRAFT_BENCH_FLAT").contains("1")
-    tables.foreach { name =>
-      val path = s"$sfDir/$name.parquet"
-      if (new java.io.File(path).exists()) {
-        val df0 = spark.read.parquet(path)
-        val rows = df0.count()
-        val parts = math.min(cpus.toLong, math.max(1L, rows / rowsPerPart(name))).toInt
-        val df = if (flatLayout || df0.rdd.getNumPartitions >= parts) df0
-                 else df0.repartition(parts)
-        df.createOrReplaceTempView(name)
-        spark.catalog.cacheTable(name)
-        df.count() // materialize outside the timed region
-      }
-    }
+    cacheTables(spark, sfDir, cpus)
 
     // one warm-up pass of a tiny query to exclude JVM/codegen cold start
     SparkEntry.queries.get("a1_checkpoint_max").foreach { fn =>
@@ -225,5 +175,59 @@ object Bench {
     println(full)
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$failed,"reps":$reps$subsetTag,"detail":"${detailPath.toString}","sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Registers each fixture table under `sfDir` as a cached, materialized
+    * temp view, so every query shares one scan per table instead of
+    * re-reading parquet per query. Returns the names of the cached tables.
+    * [[graft.tools.Prof]] uses the same layout, so its stage attribution
+    * sees what this bench sees.
+    */
+  def cacheTables(spark: SparkSession, sfDir: String, cpus: Int): Seq[String] = {
+    // Partitioning (r16, guide §2.5/§6.1): the sf fixtures are single
+    // small parquet files, so the default scan yields ONE input partition
+    // (three for lineitem) and every query's pre-exchange pipeline —
+    // normalize/shingle/md5 explodes, the most compute-dense spans of the
+    // registry — ran single-threaded (measured: x2_allpairs_jaccard spent
+    // 8.4 s of 10.6 s in two 1-task stages). A production table arrives
+    // in thousands of splits; the local 1-split layout is a fixture
+    // artifact, not a property of the queries. The cache layout is made
+    // scale-ADAPTIVE: partitions derive from the table's own row count
+    // and the session's core count (never a constant), so the driver's
+    // lower-core bench run keeps its proportional layout and sub-
+    // core-count tables (region, nation) stay single-partition instead
+    // of paying 32 near-empty cache partitions per scan. Row order inside
+    // partitions changes; every registered query is order-insensitive by
+    // house discipline (order-free aggregates, explicit output sorts —
+    // the same property the oracle hash gate already relies on).
+    // Materialization (count) stays outside the timed region.
+    // Per-row compute density drives the split rule (measured r16): the
+    // text/vector tables (KB documents, 64-dim vectors) are consumed by
+    // explode/score pipelines worth full parallelism at a few thousand
+    // rows, while relational tables are consumed by exchange-bound
+    // aggregates/joins where extra map partitions ADD cost (more blocks,
+    // more partial-buffer merges — measured: a 32-partition cache put
+    // +0.9..+1.5 s on each sketch/distinct-join query while winning
+    // nothing they needed).
+    val tables = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")
+    val rowsPerPart = Map("documents" -> 64L, "embeddings" -> 64L)
+      .withDefaultValue(16384L)
+    // SPARK_GRAFT_BENCH_FLAT=1 disables the adaptive repartition (raw
+    // fixture layout) — the interleaved-A/B knob for attributing a
+    // per-query delta to the cache LAYOUT vs the query code (BASELINE.md
+    // protocol; r16's three 32-core layout regressions).
+    val flatLayout = sys.env.get("SPARK_GRAFT_BENCH_FLAT").contains("1")
+    tables.filter(name => new java.io.File(s"$sfDir/$name.parquet").exists()).map { name =>
+      val df0 = spark.read.parquet(s"$sfDir/$name.parquet")
+      val rows = df0.count()
+      val parts = math.min(cpus.toLong, math.max(1L, rows / rowsPerPart(name))).toInt
+      val df = if (flatLayout || df0.rdd.getNumPartitions >= parts) df0
+               else df0.repartition(parts)
+      df.createOrReplaceTempView(name)
+      spark.catalog.cacheTable(name)
+      df.count() // materialize outside the timed region
+      name
+    }
   }
 }

@@ -66,8 +66,13 @@ object GraftSession {
     * when the conf is unset; a registered-but-unreadable artifact logs
     * and degrades, never fails session construction. Sessions built
     * outside [[local]] (spark-submit, notebooks handed a session) call
-    * this once after construction.
+    * this once after construction. It first installs any graft function
+    * the session lacks ([[graft.functions.GraftFunctions.register]]), so
+    * a session built without `GraftExtensions` still resolves them; on a
+    * session that has the extension that step changes nothing.
     */
-  def attach(spark: SparkSession): Option[graft.ops.ActivationStore.LoadReport] =
+  def attach(spark: SparkSession): Option[graft.ops.ActivationStore.LoadReport] = {
+    graft.functions.GraftFunctions.register(spark)
     graft.ops.ActivationStore.autoLoad(spark)
+  }
 }

@@ -49,8 +49,17 @@ object SparkEntry {
     store.load("events")._1
   }
 
-  /** One entry per implemented operator from SURVEY.md §2 (+ §2.12). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = graft.queries.Queries.all
+  /** One entry per implemented operator from SURVEY.md §2 (+ §2.12). Each
+    * entry first installs any graft function the session lacks: the driver
+    * may pass a session it built itself, without `GraftExtensions`.
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.queries.Queries.all.map { case (name, query) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        graft.functions.GraftFunctions.register(spark)
+        query(spark, dir)
+      }
+    }
 
   /** DuckDB oracle twins; queries absent here get the driver's rows-only
     * check (Spark-hash-dependent or approximate operators).

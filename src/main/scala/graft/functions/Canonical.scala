@@ -41,12 +41,6 @@ object Canonical {
   def canonicalHashExcept(attrs: Column, ignored: Seq[String]): Column =
     sha2(canonicalJsonExcept(attrs, ignored), 256)
 
-  /** Canonical digest over explicit columns: builds a key-sorted map first so
-    * callers can't get order-dependent results by reordering the projection.
-    */
-  def canonicalHashCols(cols: (String, Column)*): Column =
-    canonicalHash(map(cols.sortBy(_._1).flatMap { case (k, c) => Seq(lit(k), c.cast(StringType)) }: _*))
-
   /** Handlebars HTML-escaping of the default double-stash output
     * (`& < > " ' ` =` — reference templates escape by default; SURVEY.md
     * §2.4 row E2). Chained regexp_replace keeps it codegen-friendly.

@@ -47,7 +47,8 @@ private[graft] final class TopKHeap(val k: Int) {
 }
 
 /** Grouped top-k as a NATIVE partial aggregate, k-capped heap per
-  * buffer. Measurement first (`tools/TopKProbe`, SCALING r10): Spark 4
+  * buffer. Measurement first (SCALING.md "Grouped top-k: the window
+  * rescue measured"): Spark 4
   * already rescues the `row_number() OVER (...) <= k` window idiom
   * with `InferWindowGroupLimit` — a WindowGroupLimit below the
   * exchange ships only per-partition survivors, so "the window

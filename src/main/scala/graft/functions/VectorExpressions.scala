@@ -534,7 +534,8 @@ case class PqAdc(qv: Expression, codes: Expression, booksLit: Expression, subDim
   * (per sign bit: `when(round(graft_dot(v, typedlit(plane)), 6) >= 0, …)`)
   * pays a boxed GenericArrayData element read per plane literal element —
   * 8 bands × 14 corpus-derived bits × 64 dims = 7168 boxed reads PER ROW,
-  * measured 87 s of a 123 s ×100 near-dup run (r14 RhpStageProbe). This
+  * measured 87 s of a 123 s ×100 near-dup run (SCALING.md "Round-14:
+  * sign-LSH family re-armed scale-safe", Finding 1). This
   * expression keeps the plane matrix as a primitive double[][] reference
   * and runs the whole projection as tight JIT-able loops: same
   * arithmetic, ~1000× fewer allocations.
@@ -683,12 +684,20 @@ object GraftFunctions {
     "graft_hll_count" -> (children => HllCountDistinctAgg(children.head,
       children(1).eval().asInstanceOf[Number].doubleValue())))
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = functions.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[DotProduct].getName, name),
-      builder)
+  /** Installs each graft function the session's registry lacks. A session
+    * built with [[GraftExtensions]] already has every one, so this changes
+    * nothing there and logs no "replaced a previously registered function"
+    * WARN. Operators do not call it: the entry points that may receive a
+    * session built without the extension do, once ([[graft.GraftSession.attach]],
+    * [[graft.SparkEntry.queries]]).
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (name, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, new ExpressionInfo(classOf[DotProduct].getName, name), builder)
+    }
   }
 }
 

@@ -60,7 +60,6 @@ object BloomPrune {
       s"prunedEquiJoin: buildKey ($buildDt) and probeKey ($probeDt) hash in " +
         "different Bloom classes — a cross-class probe yields false negatives " +
         "(dropped matches); cast both keys to one canonical type first")
-    graft.functions.GraftFunctions.register(probe.sparkSession)
     // the filter is a BOUNDED artifact (optimalNumOfBits(expectedItems,
     // fpp) — KBs-to-MBs by construction), collected like the PQ codebooks
     // and embedded as a LITERAL: the probe expression decodes it ONCE per

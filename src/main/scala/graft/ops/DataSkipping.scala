@@ -670,7 +670,6 @@ object DataSkipping {
     */
   def bloomIndexAfterCompaction(index: DataFrame, plan: DataFrame,
                                 binFiles: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(index.sparkSession)
     // join on the CANONICAL full path — scheme/authority stripped, which
     // reconciles input_file_name's URI form (file:/...) with the
     // FileSystem listing's (file:///...) while keeping the directory
@@ -864,7 +863,6 @@ object DataSkipping {
     */
   def bloomIndex(spark: SparkSession, dir: String, keyCol: String,
                  expectedItemsPerFile: Long, fpp: Double = 0.01): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val table = spark.read.parquet(dir)
     val cls = bloomHashClass(table.schema(keyCol).dataType)
     table
@@ -894,7 +892,6 @@ object DataSkipping {
     * unchecked as before.
     */
   def candidateFilesByKey(index: DataFrame, key: Column): DataFrame = {
-    graft.functions.GraftFunctions.register(index.sparkSession)
     val probeCls = bloomHashClass(index.select(key.as("__k")).schema.head.dataType)
     val checked =
       if (!index.columns.contains("key_class")) index

@@ -143,7 +143,6 @@ object Dedup {
     * the same array the map side already materialized to explode.
     */
   def minhashSignaturesFromHashed(hashed: DataFrame, idCol: String, numPerm: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(hashed.sparkSession)
     hashed.groupBy(col(idCol)).agg(collect_list(col("__x")).as("__xs"))
       .select(col(idCol),
         call_function("graft_minhash_sig", col("__xs"), lit(numPerm)).as("sig"))
@@ -183,7 +182,6 @@ object Dedup {
     // degenerates every band to ONE bucket (an all-pairs self-join)
     require(bands > 0 && numPerm % bands == 0,
       s"numPerm ($numPerm) must divide into bands ($bands)")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val rowsPerBand = numPerm / bands
     val sigs = OpCaches.pin(minhashSignaturesExploded(
       explodedShingles(df, idCol, text, shingleLen), idCol, numPerm))
@@ -230,7 +228,6 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     require(bands > 0 && numPerm % bands == 0,
       s"numPerm ($numPerm) must divide into bands ($bands)")
-    graft.functions.GraftFunctions.register(incoming.sparkSession)
     val rowsPerBand = numPerm / bands
     // one signature pass per side; the same deterministic hash family on
     // both, so a doc's signature is identical whichever side it sits on
@@ -282,7 +279,6 @@ object Dedup {
     // (graft_simhash) replaces 64 parallel conditional-sum aggregates —
     // bit-identical values (votes are order-insensitive), same rewrite
     // class as minhashSignaturesFromHashed
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol), explode(tokens).as("__tok"))
       .select(col(idCol), array(md5Hash32(col("__tok"), 1), md5Hash32(col("__tok"), 9)).as("__ws"))
       .groupBy(col(idCol)).agg(collect_list(col("__ws")).as("__wss"))
@@ -318,7 +314,6 @@ object Dedup {
     // [[simhash64]]; word packs assemble as lo = w0|w1<<32, hi = w2|w3<<32
     // (bit i lives in word i/32 at position i%32, exactly the previous
     // 128-aggregate layout)
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol), explode(tokens).as("__tok"))
       .select(col(idCol), array(
         md5Hash32(col("__tok"), 1), md5Hash32(col("__tok"), 9),

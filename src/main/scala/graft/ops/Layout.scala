@@ -117,7 +117,6 @@ object Layout {
     */
   def withHValue(df: DataFrame, aCol: String, bCol: String,
                  bits: Int = ZBits): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val bounds = broadcast(df.agg(
       min(col(aCol)).as("__amin"), max(col(aCol)).as("__amax"),
       min(col(bCol)).as("__bmin"), max(col(bCol)).as("__bmax")))
@@ -152,7 +151,6 @@ object Layout {
     require(cols.size >= 2 && cols.size * bits <= 63,
       s"withHValueN: need >= 2 columns with dims*bits <= 63, got " +
         s"${cols.size} cols x $bits bits")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
       Seq(min(col(c)).as(s"__min$i"), max(col(c)).as(s"__max$i"))
     }

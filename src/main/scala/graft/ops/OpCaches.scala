@@ -30,12 +30,6 @@ object OpCaches {
     p
   }
 
-  /** Register an ALREADY-persisted frame for the next [[release]] without
-    * re-persisting (for operators that must persist mid-loop themselves,
-    * e.g. [[Components.connectedComponents]] iteration state).
-    */
-  private[graft] def adopt(df: DataFrame): DataFrame = { live.add(df); df }
-
   /** Unpersist every operator-internal table pinned since the last release.
     * Non-blocking: the block drop happens asynchronously.
     */

@@ -438,7 +438,6 @@ object Sampling {
         s"fixedKSample: $idCol must be an integral id column (got $t) — " +
           "the heap carries ids as BIGINT; map string ids to a surrogate first")
     }
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val score = Dedup.md5Hash32(
       concat_ws("|", lit(seed), col(idCol).cast("string")), 1).cast("double")
     df.groupBy(groupCols.map(col): _*)

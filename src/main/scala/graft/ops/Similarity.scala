@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,7 +56,6 @@ object Similarity {
   def cosineTopK(
       queries: DataFrame, corpus: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     // norms are materialized per ROW (once for the 1 query side, once for
     // the corpus side) so the pair loop computes a single dot product —
     // not three — and the expensive fold never re-evaluates per pair side
@@ -84,7 +82,6 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame, k: Int, nProbe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       cellCol: String = "label"): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     // per-cell centroid: element-wise mean via posexplode + pivot-free agg.
     // The mean goes through an EXACT decimal sum (order-free, like every
     // measure aggregate here) so centroid doubles are bit-identical across
@@ -185,7 +182,8 @@ object Similarity {
     // `when(round(dot(v, plane), 6) >= 0, 1L << j)` fold it replaced, but
     // the plane matrix stays a primitive double[][] instead of bands×bits
     // boxed array literals — the composed form's boxed element reads were
-    // 87 s of a 123 s ×100 near-dup run (RhpStageProbe, SCALING.md r14)
+    // 87 s of a 123 s ×100 near-dup run (SCALING.md "Round-14: sign-LSH
+    // family re-armed scale-safe", Finding 1)
     org.apache.spark.sql.graftbridge.column(
       graft.functions.SignBandBuckets(
         org.apache.spark.sql.graftbridge.expression(v),
@@ -280,7 +278,6 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       bands: Int = 16, bitsPerBand: Int = 4,
       carryVectors: Boolean = true): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val planes = Array.tabulate(bands * bitsPerBand, dim)(planeComponent)
     def bandBuckets(v: Column) = signBucketArray(v, planes, bands, bitsPerBand)
     def verify(paired: DataFrame): DataFrame = paired
@@ -353,7 +350,6 @@ object Similarity {
       df: DataFrame, threshold: Double, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       bands: Int = 8, bitsPerBand: Int = 4): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val planes = Array.tabulate(bands * bitsPerBand, dim)(planeComponent)
     val base = OpCaches.pin(df.select(col(idCol), col(vecCol).as("__v"),
       norm(col(vecCol)).as("__n")))
@@ -403,7 +399,6 @@ object Similarity {
       corpus: DataFrame, k: Int, iters: Int = 3,
       idCol: String = "vec_id", vecCol: String = "embedding",
       fitSampleSize: Int = 4096): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val spark = corpus.sparkSession
     import spark.implicits._
     val base = corpus.select(col(idCol).as("__kid"), col(vecCol).as("__kv"))
@@ -446,7 +441,6 @@ object Similarity {
     */
   def lshCells(corpus: DataFrame, dim: Int, bitsPerCell: Int = 4,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val planes = Array.tabulate(bitsPerCell, dim)(planeComponent)
     corpus.select(col(idCol),
       element_at(signBucketArray(col(vecCol), planes, 1, bitsPerCell), 1)
@@ -659,7 +653,6 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       blockCol: Option[String] = None,
       anchors: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     def project(src: DataFrame) = src.select(col(idCol) +: norm(col(vecCol)).as("__norm") +:
       col(vecCol) +: blockCol.map(col).toSeq: _*)
     val base = project(df)
@@ -713,7 +706,6 @@ object Similarity {
   def semanticDedup(
       corpus: DataFrame, threshold: Double, dim: Int, bitsPerCell: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val cells = lshCells(corpus, dim, bitsPerCell, idCol, vecCol)
     val base = corpus.select(col(idCol), col(vecCol).as("__v"), norm(col(vecCol)).as("__n"))
       .join(cells, idCol)
@@ -839,7 +831,6 @@ object Similarity {
 
   def pqCodes(corpus: DataFrame, dim: Int, m: Int = 8, bitsPerCode: Int = 4,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     corpus.select(col(idCol), pqCodesExpr(col(vecCol), dim, m, bitsPerCode).as("codes"))
   }
 
@@ -857,7 +848,6 @@ object Similarity {
     */
   def pqFitCodebooks(corpus: DataFrame, dim: Int, m: Int = 8, bitsPerCode: Int = 4,
                      idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Array[Double]]] = {
-    GraftFunctions.register(corpus.sparkSession)
     val subDim = dim / m
     val coded = corpus
       .select(col(vecCol).as("__v"), pqCodesExpr(col(vecCol), dim, m, bitsPerCode).as("__c"))
@@ -969,7 +959,6 @@ object Similarity {
     * introducing nullable scores must filter them before ranking.
     */
   private def rankTopK(scored: DataFrame, k: Int, scoreOut: String): DataFrame = {
-    GraftFunctions.register(scored.sparkSession)
     val idIsLong = scored.schema("neighbor_id").dataType ==
       org.apache.spark.sql.types.LongType
     if (idIsLong)
@@ -993,7 +982,6 @@ object Similarity {
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
              m: Int = 8, bitsPerCode: Int = 4,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     val subDim = dim / m
     val books = pqFitCodebooks(corpus, dim, m, bitsPerCode, idCol, vecCol)
     val normMaps = pqNormMaps(books, m)
@@ -1054,7 +1042,6 @@ object Similarity {
                     books: Array[Array[Array[Double]]], k: Int, nProbe: Int,
                     dim: Int, bitsPerCell: Int = 4, m: Int = 8, bitsPerCode: Int = 4,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     val subDim = dim / m
     val normMaps = pqNormMaps(books, m)
     val cellPlanes = Array.tabulate(bitsPerCell, dim)(planeComponent)
@@ -1121,7 +1108,6 @@ object Similarity {
       corpus: DataFrame, benchmark: DataFrame, threshold: Double, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       bands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val planes = Array.tabulate(bands * bitsPerBand, dim)(planeComponent)
     def banded(df: DataFrame, s: String) =
       df.select(col(idCol).as(s"id_$s"), col(vecCol).as(s"__v$s"),

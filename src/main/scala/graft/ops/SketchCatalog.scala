@@ -484,7 +484,6 @@ object SketchCatalog {
     * compacted store.
     */
   def compact(spark: SparkSession, path: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val store = spark.read.schema(catalogSchema).parquet(path)
     val unmarked = store.where(col("convention").isNull).count()
     require(unmarked == 0L,

@@ -109,7 +109,6 @@ object Sketches {
   def cmsGroupSketchesFromCounts(counts: DataFrame,
                                  eps: Double = 1e-4, confidence: Double = 0.999,
                                  seed: Int = 42): DataFrame = {
-    graft.functions.GraftFunctions.register(counts.sparkSession)
     // repartition by group FIRST: the groupBy's required distribution is
     // then already satisfied, so the aggregate plans one partial per
     // group — #groups sketch buffers total, however many partitions the
@@ -131,7 +130,6 @@ object Sketches {
     * over the whole feed: (n_groups, n_rows, sketch).
     */
   def cmsUnionSketch(sketches: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(sketches.sparkSession)
     sketches.agg(count(lit(1)).as("n_groups"),
       sum(col("n_rows")).as("n_rows"),
       call_function("graft_cms_merge", col("sketch")).as("sketch"))
@@ -153,7 +151,6 @@ object Sketches {
     */
   def qsGroupSketches(df: DataFrame, groupCol: Column, valueCol: Column,
                       relativeError: Double = 1e-4): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.groupBy(groupCol.as("group"))
       .agg(call_function("graft_qsketch_agg", valueCol.cast("double"),
         lit(relativeError)).as("sketch"),
@@ -164,7 +161,6 @@ object Sketches {
     * ([[graft.functions.QuantileMergeAgg]]): (n_groups, n_rows, sketch).
     */
   def qsUnionSketch(sketches: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(sketches.sparkSession)
     sketches.agg(count(lit(1)).as("n_groups"),
       sum(col("n_rows")).as("n_rows"),
       call_function("graft_qsketch_merge", col("sketch")).as("sketch"))
@@ -198,7 +194,6 @@ object Sketches {
   def cmsJoinCardinality(a: DataFrame, keyA: Column, b: DataFrame, keyB: Column,
                          eps: Double = 1e-4, confidence: Double = 0.999,
                          seed: Int = 42): DataFrame = {
-    graft.functions.GraftFunctions.register(a.sparkSession)
     // NOT count-first (the [[cmsGroupSketchesFromCounts]] form): join keys
     // are near-unique per row (orderkeys, user ids), so a count table
     // barely compresses and the extra key shuffle costs more than the

@@ -227,7 +227,8 @@ object FuzzyJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           // stats, undercounting L+1-fold — the auto strategy then builds
           // hash maps over the key-array-carrying rows (measured 3.7×
           // slower than SMJ on this shape at sf0.1: 4.18 s vs 1.13 s,
-          // FuzzyAb V3/V4) and OOMs outright at corpus scale, the exact
+          // SCALING.md "Round-12 fuzzy-rewrite decomposition", V3/V4) and
+          // OOMs outright at corpus scale, the exact
           // trap the direct op (Fuzzy.editNeighborPairs) documents and
           // pins against. A user-supplied hint still wins.
           val pinned =

@@ -1191,7 +1191,6 @@ object Queries {
     * incremental read path stands on.
     */
   private def x6CmsHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // physical form (r17): ONE corpus-scale pass — the exact per-(source,
     // word) count table (a map-side-combined long aggregate) is pinned and
     // everything downstream is vocabulary-sized: the top-50 recount SUMS
@@ -1241,7 +1240,6 @@ object Queries {
     * strings hash bit-for-bit.
     */
   private def x5UnicodeNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // decomposed on purpose: e+combining-acute, Angstrom SIGN (U+212B),
     // Hangul jamo, e+combining-circumflex, A+combining-ring, Ohm SIGN —
     // NFC composes every one; escapes keep the source encoding-proof
@@ -1838,7 +1836,6 @@ object Queries {
     * pairs with `jaro_winkler_similarity` and the 6-dp rounds hash-match).
     */
   private def x2JwRerank(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cust = t(spark, dir, "customer")
     val names = cust.select(col("c_custkey"), col("c_name"))
     graft.ops.Fuzzy.editNeighborPairs(cust, "c_custkey", col("c_name"))
@@ -2031,10 +2028,10 @@ object Queries {
     * reuses the window twin verbatim), but the exchange carries at most
     * k rows per (map partition, group) and nothing is globally sorted —
     * the window form ships and sorts EVERY row of a group on one task
-    * (measured A/B `tools/TopKProbe`, SCALING r10).
+    * (measured A/B: SCALING.md "Grouped top-k: the window rescue
+    * measured").
     */
   private def x7TopkAgg(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     t(spark, dir, "orders")
       .groupBy("o_orderpriority")
       .agg(call_function("graft_topk",
@@ -3658,7 +3655,6 @@ object Queries {
     * standalone twin.
     */
   private def x8CurationV12(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val seqs = array(lit("Cafe\u0301"), lit("\u212B"),
       lit("\u1100\u1161\u11A8"), lit("e\u0302tre"), lit("A\u030A"),
       lit("\u2126"))
@@ -5843,8 +5839,9 @@ object Queries {
     * eval suite — so the registered plan's candidate product scales
     * linearly in the corpus (the r6 registration's `% 25` benchmark grew
     * with the fixture, making the registered form quadratic-in-fixture;
-    * the deployment contract was only measured out-of-band in
-    * tools/AnnScaleProbe). Knobs: 16 bands × 8 bits — the high-bit regime
+    * the deployment contract was only measured out-of-band, in
+    * SCALING.md "Probe-side operators: fixed probe set"). Knobs: 16
+    * bands × 8 bits — the high-bit regime
     * (background collision rate 2^-8 per band) with the band count
     * supplying recall, which is the axis that matters for a contamination
     * GUARD (a missed near-benchmark doc leaks into training; a spurious

@@ -92,7 +92,6 @@ object StreamingAnnServe {
     */
   def codedIndex(corpus: DataFrame, fz: FrozenIvfPq,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val normMaps = Similarity.pqNormMaps(fz.books, fz.m)
     corpus.select(col(idCol).as("neighbor_id"),
         cellCol(col(vecCol), fz.cellPlanes, fz.bitsPerCell).as("__cell"),
@@ -119,7 +118,6 @@ object StreamingAnnServe {
                 k: Int, nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val subDim = fz.dim / fz.m
     // per arrival: nProbe (query, cell) rows, carrying the raw vector and
     // its norm for the ADC columns downstream

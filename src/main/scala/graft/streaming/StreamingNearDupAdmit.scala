@@ -109,7 +109,6 @@ object StreamingNearDupAdmit {
       s"numPerm ($numPerm) must divide into bands ($bands)")
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rpb = numPerm / bands
     val probes = docs.flatMap { d =>
       val sig = StreamingNearDup.signature(d.text, numPerm, shingleLen)

@@ -31,7 +31,6 @@ object StreamingRankAdmit {
                  q: Double): DataFrame = {
     require(q >= 0 && q < 1, s"admitAbove expects q in [0, 1), got $q")
     require(sketch != null && sketch.nonEmpty, "admitAbove: empty sketch artifact")
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     stream.where(call_function("graft_qsketch_rank",
       lit(sketch), scoreCol.cast("double")) >= lit(q))
   }

@@ -22,7 +22,6 @@ object StreamingTopK {
     */
   def leaderboard(stream: DataFrame, groupCol: Column, scoreCol: Column,
                   idCol: Column, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     stream.groupBy(groupCol.as("group"))
       .agg(call_function("graft_topk",
         struct(scoreCol.cast("double"), idCol.cast("long")), lit(k)).as("top"))

@@ -36,31 +36,10 @@ object Prof {
           f"tasks=${i.numTasks}%4d  ${i.name.takeWhile(_ != '\n').take(60)}")
       }
     })
-    // mimic Bench's cached-temp-view setup. PROF_REPART=n repartitions every
-    // cached table to a flat n; PROF_REPART=bench replays Bench's adaptive
-    // rowsPerPart rule exactly (so stage attribution sees the layout the
-    // driver bench sees); unset = raw fixture layout (single-file scans).
-    val repart = sys.env.get("PROF_REPART")
-    val rowsPerPart = Map("documents" -> 64L, "embeddings" -> 64L)
-      .withDefaultValue(16384L)
-    Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings").foreach { t =>
-      val p = s"$sfDir/$t.parquet"
-      if (new java.io.File(p).exists()) {
-        val df0 = spark.read.parquet(p)
-        val df = repart match {
-          case Some("bench") =>
-            val rows = df0.count()
-            val parts = math.min(cpus.toLong, math.max(1L, rows / rowsPerPart(t))).toInt
-            if (df0.rdd.getNumPartitions >= parts) df0 else df0.repartition(parts)
-          case Some(n) => df0.repartition(n.toInt)
-          case None => df0
-        }
-        df.createOrReplaceTempView(t)
-        spark.catalog.cacheTable(t)
-        spark.table(t).count() // materialize, like Bench
-        println(s"[prof] $t cached, partitions=" + spark.table(t).rdd.getNumPartitions)
-      }
+    // Bench's cached-temp-view layout (SPARK_GRAFT_BENCH_FLAT=1 for the raw
+    // fixture layout), so stage attribution sees what the bench sees
+    graft.Bench.cacheTables(spark, sfDir, cpus).foreach { t =>
+      println(s"[prof] $t cached, partitions=" + spark.table(t).rdd.getNumPartitions)
     }
     val fn = graft.SparkEntry.queries(name)
     (1 to reps).foreach { r =>
