@@ -45,8 +45,8 @@ import org.apache.spark.storage.StorageLevel
   * truncation the logical plan doubles per round — analysis cost alone
   * becomes exponential. Local checkpoints trade fault re-compute for
   * speed — the standard choice for convergent iterative refinement.
-  * Blocks of superseded rounds are dereferenced immediately and
-  * reclaimed by the context cleaner.
+  * Superseded rounds are dropped once the next is materialised; the
+  * returned one is pinned in [[OpCaches]] for `OpCaches.release()`.
   */
 object Components {
 
@@ -149,13 +149,15 @@ object Components {
         .select(col("x.id").as("id"), col("__jl").as("lbl"))
         .localCheckpoint(true)
       val next = certOf(jumped)
+      // both superseded rounds are materialised into `jumped` now
+      OpCaches.dropCheckpoint(labels, stepped)
       labels = jumped
       converged = next.compareTo(certificate) == 0 // labels only decrease: equal sum <=> no change
       certificate = next
       it += 1
     }
     edges.unpersist(blocking = false)
-    labels.select(col("id"), col("lbl").as("component"))
+    OpCaches.pinCheckpoint(labels.select(col("id"), col("lbl").as("component")))
   }
 
   /** Dedup clusters with survivors: (id, component, is_keeper) — keeper is
@@ -337,7 +339,8 @@ object Components {
       .select(col("__s"), col("__dg"), col("__nn"),
         expr("1000000 div __nn").as("__r"))
     val truncate = iters > checkpointAfter
-    for (_ <- 0 until iters) {
+    for (i <- 0 until iters) {
+      val prev = ranks
       val contrib = ranks
         .join(edges, "__s")
         .select(col("__d"), expr("__r div __dg").as("__c"))
@@ -347,10 +350,15 @@ object Components {
         .select(col("__s"), col("__dg"), col("__nn"),
           expr(s"(${1000000 - dampMilli * 1000} div __nn) + (($dampMilli * __m) div 1000)")
             .as("__r"))
-      // lineage truncation for deep K: eager, vertex-sized, value-neutral
-      if (truncate) ranks = ranks.localCheckpoint(true)
+      // lineage truncation for deep K: eager, vertex-sized, value-neutral;
+      // the superseded round is dropped once the next one is materialised
+      if (truncate) {
+        ranks = ranks.localCheckpoint(true)
+        if (i > 0) OpCaches.dropCheckpoint(prev)
+      }
     }
-    ranks.select(col("__s").as("id"), col("__r").as("pagerank_micros"))
+    val out = ranks.select(col("__s").as("id"), col("__r").as("pagerank_micros"))
+    if (truncate && iters > 0) OpCaches.pinCheckpoint(out) else out
   }
 
   /** Bounded-small route: the identical integer recurrence over the

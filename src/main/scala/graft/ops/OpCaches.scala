@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 import java.util.concurrent.ConcurrentLinkedQueue
 
@@ -19,23 +20,35 @@ import java.util.concurrent.ConcurrentLinkedQueue
   */
 object OpCaches {
 
-  private val live = new ConcurrentLinkedQueue[DataFrame]()
+  private val live = new ConcurrentLinkedQueue[() => Unit]()
 
   /** Persist `df` (memory-and-disk) and register it for the next
     * [[release]]. Returns the persisted frame.
     */
   private[graft] def pin(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    live.add(p)
+    live.add(() => p.unpersist(blocking = false))
     p
   }
+
+  /** Register `df`, a frame over eager `localCheckpoint`s, for [[release]]. */
+  private[graft] def pinCheckpoint(df: DataFrame): DataFrame = { live.add(() => dropCheckpoint(df)); df }
+
+  /** Drop the blocks of the `localCheckpoint`s `dfs` read: the only copy of
+    * their rows, so `dfs` cannot be read again.
+    */
+  private[graft] def dropCheckpoint(dfs: DataFrame*): Unit =
+    dfs.foreach(_.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    })
 
   /** Unpersist every operator-internal table pinned since the last release.
     * Non-blocking: the block drop happens asynchronously.
     */
   def release(): Unit = {
-    var df = live.poll()
-    while (df != null) { df.unpersist(blocking = false); df = live.poll() }
+    var drop = live.poll()
+    while (drop != null) { drop(); drop = live.poll() }
   }
 
   /** Number of currently pinned helper tables (test observability). */

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
+import graft.state.AtomicSwap
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -454,10 +455,22 @@ object SketchCatalog {
 
   /** Persist catalog rows. `append = true` is the incremental-maintenance
     * path (harvest only the new/changed tables, append; latest row per
-    * (table, key) wins at load via max n_rows — re-harvests supersede).
+    * (table, key) wins at load via max n_rows — re-harvests supersede);
+    * otherwise the rows replace the store in one [[AtomicSwap]] commit.
     */
-  def save(catalog: DataFrame, path: String, append: Boolean = false): Unit =
-    catalog.write.mode(if (append) "append" else "overwrite").parquet(path)
+  def save(catalog: DataFrame, path: String, append: Boolean = false): Unit = {
+    val (fs, p) = recovered(catalog.sparkSession, path)
+    if (append) catalog.write.mode("append").parquet(path)
+    else AtomicSwap.replace(fs, p)(tmp => catalog.write.parquet(tmp.toString))
+  }
+
+  /** The store's FileSystem, after [[AtomicSwap.recover]]. */
+  private def recovered(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    AtomicSwap.recover(fs, p)
+    (fs, p)
+  }
 
   /** Merge a DELTA-style store ([[harvestFiles]] slices appended over
     * time) down to ONE row per (table, key), exactly: n_rows/n_bytes
@@ -465,9 +478,9 @@ object SketchCatalog {
     * merged bytes are BIT-IDENTICAL to a one-shot harvest of the same
     * rows), HLL unions by register max (estimate-identical to one-shot,
     * the SketchesSpec property), distinct_est re-derived from the merged
-    * HLL. Rewrites the store in place (the merged rows are collected
-    * first — a catalog is KBs per table, and parquet cannot overwrite a
-    * path mid-read) and returns the merged frame.
+    * HLL. Replaces the store with one [[AtomicSwap]] commit (the merged
+    * rows are written beside the store, which stays readable until the
+    * swap) and returns the merged frame.
     *
     * Disjointness is enforced via the stamped convention marker: the sum
     * is exact when each (table, key) group holds disjoint delta slices
@@ -484,6 +497,7 @@ object SketchCatalog {
     * compacted store.
     */
   def compact(spark: SparkSession, path: String): DataFrame = {
+    val (fs, p) = recovered(spark, path)
     val store = spark.read.schema(catalogSchema).parquet(path)
     val unmarked = store.where(col("convention").isNull).count()
     require(unmarked == 0L,
@@ -513,28 +527,7 @@ object SketchCatalog {
         hll_sketch_estimate(col("hll")).cast("double").as("distinct_est"),
         col("cms"), col("hll"), col("heavy"),
         lit(ConventionFull).as("convention"))
-      .collect()
-    val out = spark.createDataFrame(
-      spark.sparkContext.parallelize(merged.toIndexedSeq, 1), catalogSchema)
-    // crash-safe swap (the EntityStateStore.swapIn pattern): a plain
-    // overwrite deletes the store BEFORE the new write commits, so a
-    // mid-write failure would destroy the whole planning-artifact store
-    // with the merged rows existing only in driver memory. Write to a
-    // sibling temp dir, then rename into place; the old store is removed
-    // only after the new one is durable.
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val tag = System.nanoTime()
-    val tmp = new Path(p.getParent, s".${p.getName}.compact-tmp-$tag")
-    val old = new Path(p.getParent, s".${p.getName}.compact-old-$tag")
-    out.write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"SketchCatalog.compact: cannot move $p aside")
-    if (!fs.rename(tmp, p)) { // restore the original before failing
-      fs.rename(old, p)
-      throw new java.io.IOException(s"SketchCatalog.compact: cannot swap in $tmp")
-    }
-    fs.delete(old, true)
+    AtomicSwap.replace(fs, p)(tmp => merged.write.parquet(tmp.toString))
     spark.read.schema(catalogSchema).parquet(path)
   }
 
@@ -543,6 +536,7 @@ object SketchCatalog {
     * un-hinted equi-joins over catalogued tables from these artifacts.
     */
   def activate(spark: SparkSession, path: String): Catalog = {
+    recovered(spark, path)
     val rows = spark.read.schema(catalogSchema).parquet(path).collect()
     // an UNCOMPACTED delta store (harvestFiles slices) under latest-wins
     // would load ONE slice's partial CMS/HLL — understated cardinalities,

@@ -2,6 +2,7 @@ package graft.source.v2
 
 import graft.model.{EntityType, Model}
 import graft.source.{EntityApiSource, Json}
+import graft.state.EntityStateStore
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -131,10 +132,7 @@ object PageDrain {
       if (retain && page.items.nonEmpty) items += page.items
       val maxTs = page.items.flatMap(Json.parseFlatObject(_).get(Model.UpdatedOnMs))
         .flatMap(Json.numberToLong)
-      // checkpoint = max(updatedOnMs) over all fetched items (cache.js:100-108);
-      // invalid/absent keeps previous; stall bump under partialResults (:114-117)
-      val next = if (maxTs.isEmpty) checkpoint else math.max(checkpoint, maxTs.max)
-      checkpoint = if (page.partialResults && next == checkpoint) checkpoint + 1 else next
+      checkpoint = EntityStateStore.nextCheckpoint(maxTs.maxOption, checkpoint, page.partialResults)
       partial = page.partialResults
     }
     (items.result(), checkpoint)

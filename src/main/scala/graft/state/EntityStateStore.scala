@@ -1,39 +1,45 @@
 package graft.state
 
 import graft.model.Model
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Persisted per-entity-type state: the Spark replacement for the reference's
   * per-type JSON cache file (reference cache.js:20-48 — SURVEY.md §2 rows
   * S4/K2/F4/A1/W5).
   *
   * Layout: `<root>/<type>/current/` holds a parquet state table with
-  * Model.stateSchema; `<root>/<type>/checkpoint` holds the epoch-millis
-  * watermark. Commits write to a temp dir then swap via atomic-ish rename
-  * (no transactional table format in the offline env — SURVEY.md §7.5
-  * risk 4), preserving the reference's page-granular commit ordering
+  * Model.stateSchema and, as `current/_checkpoint`, the epoch-millis
+  * watermark (Spark's reader skips `_`-prefixed files). Each commit writes
+  * both into a fresh directory and swaps it in with [[AtomicSwap]], so
+  * state and checkpoint become visible in one rename and a torn checkpoint
+  * is never committed. This keeps the reference's page-granular commit
   * (reference app.js:57-58 commits after *each* page).
   */
 final class EntityStateStore(spark: SparkSession, root: String) {
 
-  private def typeDir(t: String): Path = Paths.get(root, t)
-  private def currentDir(t: String): Path = typeDir(t).resolve("current")
-  private def ckptFile(t: String): Path = typeDir(t).resolve("checkpoint")
+  // one per store: sessions here disable the FileSystem cache for file://
+  private val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def currentDir(t: String): Path = new Path(new Path(root, t), "current")
 
   /** Load state; missing path -> empty DF with schema + default checkpoint
-    * (reference cache.js:20-35: empty-on-missing bootstrap).
+    * (reference cache.js:20-35: empty-on-missing bootstrap). A state with
+    * no `_checkpoint` also starts from the default: a replay against the
+    * kept state.
     */
   def load(entityType: String): (DataFrame, Long) = {
     val dir = currentDir(entityType)
-    val df =
-      if (Files.exists(dir)) spark.read.schema(Model.stateSchema).parquet(dir.toString)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Model.stateSchema)
+    AtomicSwap.recover(fs, dir)
+    val ckptFile = new Path(dir, "_checkpoint")
     val ckpt =
-      if (Files.exists(ckptFile(entityType))) Files.readString(ckptFile(entityType)).trim.toLong
-      else Model.DefaultCheckpoint
+      if (!fs.exists(ckptFile)) Model.DefaultCheckpoint
+      else { val in = fs.open(ckptFile); try new String(in.readAllBytes(), UTF_8).trim.toLong finally in.close() }
+    val df =
+      if (fs.exists(dir)) spark.read.schema(Model.stateSchema).parquet(dir.toString)
+      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Model.stateSchema)
     (df, ckpt)
   }
 
@@ -46,7 +52,7 @@ final class EntityStateStore(spark: SparkSession, root: String) {
     *     changed rows is replaced;
     *  2. evict entries whose ttl passed (cache.js:60-67, F4);
     *  3. advance the checkpoint;
-    *  4. swap the parquet dir + checkpoint file.
+    *  4. swap in the parquet dir with its `_checkpoint`.
     *
     * `batch` columns: id, entityJson, entityHash (updatedOnMs already
     * stripped from json/hash by the caller — cache.js:53, see
@@ -76,7 +82,7 @@ final class EntityStateStore(spark: SparkSession, root: String) {
       .join(fresh.select(col("id").as("__bid")), col("id") === col("__bid"), "left_anti")
     val next = survivors.unionByName(fresh).select(Model.stateSchema.fieldNames.map(col): _*)
 
-    swapIn(entityType, next, nowMs, newCheckpoint)
+    replaceState(entityType, next, newCheckpoint)
   }
 
   /** K5: MERGE-style multi-action commit ([[Merge.merge]]) — one commit
@@ -94,35 +100,23 @@ final class EntityStateStore(spark: SparkSession, root: String) {
       batch: DataFrame,
       nowMs: Long,
       ttlMs: Long,
-      newCheckpoint: Long,
-      preloadedState: Option[DataFrame] = None): Unit = {
-    val state = preloadedState.getOrElse(load(entityType)._1)
+      newCheckpoint: Long): Unit = {
     val actions = StateStores.dedupNewestPerId(batch)
       .select(col("id"), lit(nowMs + ttlMs).as("ttl"), col("entityJson"),
         col("entityHash"), col("op"))
-    val live = state.where(col("ttl") >= lit(nowMs)) // F4 eviction
+    val live = load(entityType)._1.where(col("ttl") >= lit(nowMs)) // F4 eviction
     val next = Merge.merge(live, actions, "id", "op",
         Seq("ttl", "entityJson", "entityHash"))
       .select(Model.stateSchema.fieldNames.map(col): _*)
-    swapIn(entityType, next, nowMs, newCheckpoint)
+    replaceState(entityType, next, newCheckpoint)
   }
 
-  private def swapIn(entityType: String, next: DataFrame, nowMs: Long,
-                     newCheckpoint: Long): Unit = {
-    val tmp = typeDir(entityType).resolve(s"tmp-$nowMs-${System.nanoTime()}")
-    Files.createDirectories(typeDir(entityType))
-    next.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-
-    val cur = currentDir(entityType)
-    val old = typeDir(entityType).resolve(s"old-${System.nanoTime()}")
-    if (Files.exists(cur)) Files.move(cur, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, cur, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(old)) deleteRecursively(old)
-    Files.writeString(ckptFile(entityType), newCheckpoint.toString)
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
+  private def replaceState(entityType: String, next: DataFrame, newCheckpoint: Long): Unit =
+    AtomicSwap.replace(fs, currentDir(entityType)) { tmp =>
+      next.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      val out = fs.create(new Path(tmp, "_checkpoint"), false)
+      try out.write(newCheckpoint.toString.getBytes(UTF_8)) finally out.close()
+    }
 }
 
 object EntityStateStore {

@@ -57,68 +57,13 @@ object StreamingCdc {
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
-  /** Streaming F2/F4/W5 as a [[StatefulProcessor]]: emit iff new-or-changed;
-    * every touch refreshes the TTL (the state update resets the TTL clock —
-    * reference cache.js:56,79); expired state reads as absent, so a
-    * re-appearing entity is emitted as "new" again.
-    *
-    * State carries (updatedOnMs, hash), not the hash alone: a late
-    * micro-batch delivering an OLDER version than the one already applied
-    * must be suppressed, not emitted — hash-only state would overwrite the
-    * target with stale content and then re-fire on the newer version's
-    * redelivery. Within a batch, versions process in event-time order (the
-    * intra-batch form of the same rule). The suppressed-row TTL refresh
-    * writes state only when a TTL is configured — with TTL off the rewrite
-    * is a pure RocksDB churn on the hottest (duplicate) path.
+  /** Streaming new-or-updated filter keyed by entity id (F2/F4/W5): each
+    * event is an upsert through [[mergeStream]], emitted iff new or changed.
+    * Every touch refreshes the TTL (reference cache.js:56,79); expired state
+    * reads as absent, so a re-appearing entity is "new" again.
     */
-  final class CdcProcessor(ttlMs: Long) extends StatefulProcessor[String, EntityEvent, Change] {
-    @transient private var verState: ValueState[(Long, String)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl = if (ttlMs > 0) new TTLConfig(java.time.Duration.ofMillis(ttlMs)) else TTLConfig.NONE
-      verState = getHandle.getValueState[(Long, String)]("entityVerHash",
-        Encoders.tuple(Encoders.scalaLong, Encoders.STRING), ttl)
-    }
-
-    override def handleInputRows(id: String, rows: Iterator[EntityEvent],
-        timerValues: TimerValues): Iterator[Change] = {
-      val out = Seq.newBuilder[Change]
-      // process versions in event-time order; emit each content transition
-      // null payload must not NPE the tiebreak sort (Ordering.String is
-      // null-hostile); "" matches the hash treatment below
-      rows.toSeq.sortBy(e => (e.updatedOnMs, Option(e.payload).getOrElse(""))).foreach { e =>
-        val h = md5Hex(Option(e.payload).getOrElse("")) // null-safe, like the batch Column path
-        Option(verState.get()) match {
-          case None =>
-            out += Change(id, e.updatedOnMs, e.payload, "new")
-            verState.update((e.updatedOnMs, h))
-          case Some((prevMs, _)) if e.updatedOnMs < prevMs =>
-            // stale late arrival: suppress; touch refreshes TTL like any read
-            if (ttlMs > 0) verState.update(verState.get())
-          case Some((_, prevHash)) if prevHash != h =>
-            out += Change(id, e.updatedOnMs, e.payload, "updated")
-            verState.update((e.updatedOnMs, h))
-          case Some((prevMs, prevHash)) =>
-            // unchanged -> suppressed; advance the version watermark, write
-            // state only when the write buys a TTL refresh
-            if (ttlMs > 0 || e.updatedOnMs > prevMs)
-              verState.update((math.max(prevMs, e.updatedOnMs), prevHash))
-        }
-      }
-      out.result().iterator
-    }
-  }
-
-  /** Streaming new-or-updated filter keyed by entity id. TTL > 0 requires
-    * processing-time mode (the TTL clock is processing time, like the
-    * reference's wall-clock cache TTL).
-    */
-  def newOrUpdatedStream(events: Dataset[EntityEvent], ttlMs: Long): Dataset[Change] = {
-    import events.sparkSession.implicits._
-    val timeMode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
-    events.groupByKey(_.id)
-      .transformWithState(new CdcProcessor(ttlMs), timeMode, OutputMode.Append())
-  }
+  def newOrUpdatedStream(events: Dataset[EntityEvent], ttlMs: Long): Dataset[Change] =
+    mergeStream(events.map(e => Action(e.id, e.updatedOnMs, "upsert", e.payload))(Encoders.product[Action]), ttlMs)
 
   /** One incoming MERGE action on the stream: `op = "delete"` is a
     * tombstone, anything else upserts (the [[graft.state.Merge]]
@@ -128,9 +73,12 @@ object StreamingCdc {
 
   /** K5 streaming — MERGE with tombstones through the CDC state (the
     * stream form of [[graft.state.Merge.merge]] /
-    * [[graft.state.EntityStateStore.commitMerge]]): upserts flow through
-    * the exact [[CdcProcessor]] semantics (new / updated / suppressed /
-    * stale-late-arrival), and a `delete` action CLEARS the key's state
+    * [[graft.state.EntityStateStore.commitMerge]]): an upsert is "new" or
+    * "updated" iff its content hash differs from state. State carries
+    * (updatedOnMs, hash): a late version OLDER than the applied one is
+    * suppressed, not written over the target. A suppressed row rewrites
+    * state only for a TTL refresh (else it is pure RocksDB churn on the
+    * hottest path). A `delete` action CLEARS the key's state
     * and suppresses any content emission — downstream sees one tombstone
     * Change (`changeType = "deleted"`, empty payload: targets need the
     * marker to propagate the delete) and nothing else, a re-appearing id

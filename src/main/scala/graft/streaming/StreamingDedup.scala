@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * (keeper id) per distinct content — at 100 TB of corpus that is bounded
   * by distinct-content cardinality, not row count, and an optional TTL
   * bounds it further for rolling-window dedup (same TTL machinery as the
-  * entity cache, [[StreamingCdc.CdcProcessor]]).
+  * entity cache, [[StreamingCdc.MergeProcessor]]).
   *
   * Within one micro-batch the smallest docId wins (matches X1's keep-min
   * semantics); across batches the first arrival wins — the streaming

@@ -154,4 +154,17 @@ class ComponentsSpec extends SparkSpec {
     graft.ops.OpCaches.release()
     assert(intMap == intDist, s"int-id route divergence: $intMap vs $intDist")
   }
+
+  test("iteration rounds leave no persisted RDD once OpCaches.release() runs") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val chain = (1L to 20L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("id_a", "id_b")
+    val cc = Components.connectedComponents(chain, driverEdgeLimit = 0)
+    assert(cc.count() == 20)
+    // pageRank's truncated route checkpoints every round the same way
+    val pr = Components.pageRank(chain, iters = 4, checkpointAfter = 0, driverEdgeLimit = 0L)
+    assert(pr.count() == 20)
+    graft.ops.OpCaches.release()
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"still persisted: RDDs $left")
+  }
 }

@@ -210,6 +210,14 @@ class HttpLoopbackSpec extends SparkSpec {
       intercept[Exception] { job.runType(EntityType("widget", "uid")) }
       val (state, ckpt) = store.load("widget")
       assert(state.count() == 0 && ckpt == 1) // at-least-once: replay next run
+
+      // the target recovers: the next run over the same store replays every
+      // document and the checkpoint reaches the end of the feed
+      failPuts = false
+      job.runType(EntityType("widget", "uid"))
+      val delivered = received.asScala.map(_._2).mkString
+      assert(Seq("a", "b", "c").forall(id => delivered.contains(s""""id": "$id"""")))
+      assert(store.load("widget")._2 == 300)
     }
   }
 }
