@@ -47,7 +47,4 @@ object Model {
     * (reference cache.js:18, app.js:77).
     */
   val DefaultCheckpoint: Long = 1L
-
-  /** Entities-response envelope flag (reference README.md:206-254). */
-  final case class Envelope(items: Seq[String], partialResults: Boolean)
 }

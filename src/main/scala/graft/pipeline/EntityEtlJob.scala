@@ -124,8 +124,7 @@ final class EntityEtlJob(
       // commit AFTER send (W2). All fetched ids get a TTL refresh
       // (cache.js:79 runs before the change test), cached copy minus
       // updatedOnMs (cache.js:53).
-      store.commit(entityType.name, newest, now(), ttlMs, nextCkpt,
-        preloadedState = Some(state)) // one state scan per page, not two
+      store.commit(entityType.name, newest, now(), ttlMs, nextCkpt, state)
 
       log.info(s"${entityType.name}: fetched=$fetched dropped=$dropped " +
         s"emitted=$emitted batches=$batches checkpoint $prevCheckpoint -> $nextCkpt")

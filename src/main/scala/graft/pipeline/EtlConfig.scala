@@ -1,10 +1,12 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.JsonNode
 import graft.sink.HttpBatchSink
 import graft.source.{EntityApiSource, Json}
 import graft.state.EntityStateStore
 import graft.template.TemplateCompiler
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Typed view of the reference's `config.json` (reference config.json:1-23,
   * loaded at app.js:11) — the last cosmetic parity gap from round 3: every
@@ -70,24 +72,28 @@ object EtlConfig {
   def load(path: java.nio.file.Path): EtlConfig =
     fromJson(java.nio.file.Files.readString(path))
 
+  /** Absent keys take the reference defaults; malformed JSON fails, as the
+    * reference's `JSON.parse` of config.json would.
+    */
   def fromJson(text: String): EtlConfig = {
-    val top = Json.parseFlatObject(text)
-    val sfx = Json.subObject(text, "sfx").getOrElse("{}")
-    val target = Json.subObject(text, "target").getOrElse("{}")
-    val sfxFlat = Json.parseFlatObject(sfx)
-    val targetFlat = Json.parseFlatObject(target)
+    val top = Json.read(text, "config")
+    val (sfx, target) = (top.path("sfx"), top.path("target"))
+    def opt(node: JsonNode, key: String) = Json.render(node.path(key))
+    def str(node: JsonNode, key: String, default: String) = opt(node, key).getOrElse(default)
+    def headers(endpoint: JsonNode) = endpoint.path("headers").properties.asScala
+      .flatMap(e => Json.render(e.getValue).map(e.getKey -> _)).toMap
     EtlConfig(
-      logLevel = top.getOrElse("logLevel", "info"),
-      sfxServer = sfxFlat.getOrElse("server", ""),
-      sfxHeaders = Json.subObject(sfx, "headers").map(Json.parseFlatObject).getOrElse(Map.empty),
-      typesEndpoint = sfxFlat.getOrElse("entitiesTypesEndpoint", "/v2/entities/types"),
-      entitiesEndpoint = sfxFlat.getOrElse("entitiesEndpoint", ""),
-      targetMethod = targetFlat.getOrElse("method", "PUT"),
-      targetServer = targetFlat.getOrElse("server", ""),
-      targetHeaders = Json.subObject(target, "headers").map(Json.parseFlatObject).getOrElse(Map.empty),
-      targetEndpoint = targetFlat.getOrElse("entitiesEndpoint", ""),
-      maxBatchSize = targetFlat.get("maxBatchSize").flatMap(Json.numberToLong).fold(10000)(_.toInt),
-      cacheTtlHours = top.get("entitiesCacheTtlInHours").flatMap(_.toDoubleOption).getOrElse(8.0))
+      logLevel = str(top, "logLevel", "info"),
+      sfxServer = str(sfx, "server", ""),
+      sfxHeaders = headers(sfx),
+      typesEndpoint = str(sfx, "entitiesTypesEndpoint", "/v2/entities/types"),
+      entitiesEndpoint = str(sfx, "entitiesEndpoint", ""),
+      targetMethod = str(target, "method", "PUT"),
+      targetServer = str(target, "server", ""),
+      targetHeaders = headers(target),
+      targetEndpoint = str(target, "entitiesEndpoint", ""),
+      maxBatchSize = opt(target, "maxBatchSize").flatMap(Json.numberToLong).fold(10000)(_.toInt),
+      cacheTtlHours = opt(top, "entitiesCacheTtlInHours").flatMap(_.toDoubleOption).getOrElse(8.0))
   }
 
   /** Wire a ready-to-run [[EntityEtlJob]] for one entity type from the

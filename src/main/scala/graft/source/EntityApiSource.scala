@@ -1,12 +1,14 @@
 package graft.source
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.model.{EntityType, Model}
 import graft.template.TemplateCompiler
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import scala.jdk.CollectionConverters._
 
 /** Incremental entity source (SURVEY.md §2 rows S1-S3, §2.10 W1/W4).
   *
@@ -19,9 +21,13 @@ import java.time.Duration
   * The fetch itself is a driver-side page loop (pages are small and strictly
   * sequential in the reference — each page's checkpoint depends on the
   * previous commit, so there is nothing to parallelize *across* pages);
-  * parallelism comes from Spark once a page lands as a DataFrame. A page is
-  * parsed with `spark.read.json` over a Dataset[String] — schema-on-read for
-  * the dynamic entity key set (SURVEY.md §1.2).
+  * parallelism comes from Spark once a page lands as a DataFrame. Every
+  * item becomes (id, updatedOnMs, attrs) through [[parseEntity]], the one
+  * parser of both this loop and the `graft-entities` reader: each value
+  * renders from the value alone ([[Json.render]]), never from the other
+  * items of its page, so an unchanged entity keeps its content hash
+  * whatever page it arrives on (the reference compares an entity with its
+  * own cached copy, cache.js:69-85).
   */
 object EntityApiSource {
 
@@ -59,11 +65,15 @@ object EntityApiSource {
     }
   }
 
-  /** GET the type catalog `{name, uniqueIdField}[]` (reference app.js:71-74). */
+  /** GET the type catalog `{name, uniqueIdField}[]` (reference app.js:71-74).
+    * A body that is not a JSON array fails, naming the catalog URL.
+    */
   def fetchEntityTypes(fetch: Fetcher, typesUrl: String): Seq[EntityType] = {
-    val body = fetch(typesUrl)
-    Json.parseArray(body).flatMap { obj =>
-      for (n <- obj.get("name"); id <- obj.get("uniqueIdField")) yield EntityType(n, id)
+    val catalog = Json.read(fetch(typesUrl), s"type catalog $typesUrl")
+    require(catalog.isArray, s"type catalog $typesUrl: expected a JSON array")
+    catalog.asScala.toSeq.flatMap { t =>
+      for (n <- Json.render(t.path("name")); id <- Json.render(t.path("uniqueIdField")))
+        yield EntityType(n, id)
     }
   }
 
@@ -84,43 +94,71 @@ object EntityApiSource {
     Page(items, partial)
   }
 
-  /** Parse a page into the canonical batch DataFrame
-    * (id, updatedOnMs, attrs map<string,string>) — flat entities only, per
-    * the reference data model (SURVEY.md §1.1: values arrive pre-stringified).
+  /** One item as (id, updatedOnMs, attrs):
+    *  - `attrs` holds every key but `updatedOnMs`, each value rendered by
+    *    [[Json.render]] (a JSON null drops its key);
+    *  - `id` is the rendered `idField` value, None when absent or null;
+    *  - `updatedOnMs` is [[Json.numberToLong]] of a number or a string, None
+    *    otherwise; such an item does not move the checkpoint (a page with
+    *    none logs the frozen-checkpoint warning).
+    *
+    * An item that is not a JSON object gets no id, so the missing-id filter
+    * drops it and the page counts it as dropped (F3).
+    */
+  def parseEntity(item: String, idField: String): (Option[String], Option[Long], Map[String, String]) =
+    scala.util.Try(Json.read(item, "entity item")).toOption.filter(_.isObject) match {
+      case None => (None, None, Map.empty)
+      case Some(obj) =>
+        val rendered = obj.properties.asScala.iterator
+          .flatMap(e => Json.render(e.getValue).map(e.getKey -> _)).toMap
+        val updated = Some(obj.path(Model.UpdatedOnMs)).filter(v => v.isNumber || v.isTextual)
+          .flatMap(v => Json.numberToLong(v.asText))
+        (rendered.get(idField), updated, rendered - Model.UpdatedOnMs)
+    }
+
+  /** A page as the canonical batch DataFrame (Model.entityBatchSchema). The
+    * items are parsed by [[parseEntity]] inside the tasks of whichever job
+    * first reads the frame; building it runs no Spark job.
     */
   def pageToDf(spark: SparkSession, page: Page, entityType: EntityType): DataFrame = {
     import spark.implicits._
-    val raw = spark.read.json(spark.createDataset(page.items))
-    if (raw.columns.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Model.entityBatchSchema)
-    } else {
-      val attrCols = raw.columns.filterNot(_ == Model.UpdatedOnMs)
-      val attrs = map(attrCols.flatMap(c => Seq(lit(c), col(s"`$c`").cast("string"))): _*)
-      val updated =
-        if (raw.columns.contains(Model.UpdatedOnMs)) col(Model.UpdatedOnMs).cast("long")
-        else lit(null).cast("long")
-      // a page where NO item carries the id key infers a schema without the
-      // column; selecting it would throw at analysis. Those rows are F3's
-      // log-and-skip case — give them a null id so dropMissingId filters
-      // them instead of crashing the run loop.
-      val idCol =
-        if (raw.columns.contains(entityType.uniqueIdField))
-          col(s"`${entityType.uniqueIdField}`").cast("string")
-        else lit(null).cast("string")
-      raw.select(
-        idCol.as("id"),
-        updated.as(Model.UpdatedOnMs),
-        map_filter(attrs, (_, v) => v.isNotNull).as("attrs"))
-    }
+    val idField = entityType.uniqueIdField
+    spark.createDataset(page.items).map(parseEntity(_, idField))
+      .toDF(Model.entityBatchSchema.fieldNames.toSeq: _*)
   }
 }
 
-/** Minimal dependency-free JSON helpers for the driver-side envelope only
-  * (row-level parsing is done by spark.read.json). Handles the reference's
-  * `{items: [...], partialResults: bool}` shape and the flat type-catalog
-  * array; not a general JSON parser.
+/** The one JSON reader: Jackson's tree model (the parser Spark itself ships)
+  * for entity items, the config file and the type catalog, plus a tolerant
+  * envelope splitter, so one malformed item drops alone instead of failing
+  * its page.
+  *
+  * One rendering rule turns a JSON value into an attribute string, from the
+  * value alone: a string is its text; an integral number its decimal
+  * digits; any other number `java.lang.Double.toString`; a boolean `true`
+  * or `false`; an object or array its compact JSON text (a change inside it
+  * is still a change); a null has no rendering and drops its key.
   */
 private[graft] object Json {
+
+  private val mapper = new ObjectMapper()
+
+  /** Parse `text` as one JSON document; malformed input fails naming `what`. */
+  def read(text: String, what: String): JsonNode =
+    try mapper.readTree(text)
+    catch {
+      case e: JsonProcessingException =>
+        throw new IllegalArgumentException(s"malformed JSON in $what: ${e.getOriginalMessage}", e)
+    }
+
+  /** A value under the one rendering rule; None for a null or absent value. */
+  def render(v: JsonNode): Option[String] =
+    if (v.isNull || v.isMissingNode) None
+    else if (v.isTextual) Some(v.textValue)
+    else if (v.isIntegralNumber) Some(v.asText)
+    else if (v.isNumber) Some(java.lang.Double.toString(v.doubleValue))
+    else if (v.isBoolean) Some(v.booleanValue.toString)
+    else Some(v.toString)
 
   /** Split `{"items":[{...},{...}],"partialResults":true}` into raw item
     * strings + flag, by brace matching (string-aware). The flag is matched
@@ -167,15 +205,6 @@ private[graft] object Json {
     s.length - 1
   }
 
-  /** Parse a flat JSON array of flat string-valued objects into key->value
-    * maps (sufficient for the type catalog).
-    */
-  def parseArray(body: String): Seq[Map[String, String]] = {
-    val start = body.indexOf('[')
-    if (start < 0) Seq.empty
-    else topLevelObjects(body, start).map(parseFlatObject)
-  }
-
   /** Extract top-level `{...}` object substrings of the array starting at
     * `start` (index of '[').
     */
@@ -203,163 +232,6 @@ private[graft] object Json {
     out.result()
   }
 
-  /** A flat JSON scalar with its syntactic kind, so consumers that must
-    * match Spark's own json-read semantics (the V2 entity reader) can
-    * distinguish the STRING "1.50" from the NUMBER 1.50 and drop JSON
-    * nulls the way `spark.read.json` + string cast does.
-    */
-  final case class Scalar(raw: String, kind: Int)
-  object Scalar {
-    val Str = 0; val Num = 1; val Lit = 2 // Lit: true / false / null
-  }
-
-  /** [[Scalar]] value normalized to the string `spark.read.json` +
-    * `cast("string")` produces (the v1 `pageToDf` path), or None for a JSON
-    * null (v1 drops null attrs via map_filter): numbers render through
-    * Long/Double like the inferred column types would, everything else
-    * passes through. Keeps the content hash identical no matter which
-    * source path parsed the entity.
-    */
-  def normalizeScalar(s: Scalar, widenToDouble: Boolean = false): Option[String] = s.kind match {
-    case Scalar.Lit if s.raw == "null" => None
-    case Scalar.Num =>
-      val rendered =
-        if (s.raw.matches("-?\\d+") && !widenToDouble)
-          scala.util.Try(java.lang.Long.parseLong(s.raw).toString)
-            .getOrElse(new java.math.BigDecimal(s.raw).toBigInteger.toString)
-        // widenToDouble: v1 infers ONE type per column per page, so an
-        // integral value sharing a page-column with a fractional one goes
-        // through the double rendering there ("2" -> "2.0"); the v2 reader
-        // passes widen=true for exactly those (page, key) pairs
-        else java.lang.Double.toString(java.lang.Double.parseDouble(s.raw))
-      Some(rendered)
-    case _ => Some(s.raw)
-  }
-
-  /** Parse `{"k":"v","n":1}` into Map(k->v, n->"1") — flat scalars only.
-    *
-    * Cursor-based (not regex) so that (a) numbers in exponent notation
-    * (`1.5e9`) parse like any JSON number, and (b) nested object/array values
-    * are skipped whole instead of having their inner pairs hoisted to the top
-    * level.
-    */
-  def parseFlatObject(obj: String): Map[String, String] =
-    parseFlatObjectTyped(obj).map { case (k, s) => k -> s.raw }
-
-  /** [[parseFlatObject]] preserving each value's syntactic [[Scalar]] kind. */
-  def parseFlatObjectTyped(obj: String): Map[String, Scalar] = {
-    val m = Map.newBuilder[String, Scalar]
-    var i = obj.indexOf('{')
-    if (i < 0) return Map.empty
-    i += 1
-
-    def skipWs(): Unit = while (i < obj.length && obj.charAt(i).isWhitespace) i += 1
-
-    /** Scan a JSON string starting at the opening quote; returns the raw
-      * (still-escaped) contents and leaves `i` past the closing quote.
-      */
-    def scanString(): String = {
-      val start = i + 1
-      i += 1
-      var esc = false
-      while (i < obj.length && (esc || obj.charAt(i) != '"')) {
-        esc = !esc && obj.charAt(i) == '\\'
-        i += 1
-      }
-      val raw = obj.substring(start, i)
-      i += 1 // past closing quote
-      raw
-    }
-
-    /** Skip a nested `{...}` or `[...]` value wholesale (string-aware). */
-    def skipComposite(): Unit = {
-      var depth = 0; var inStr = false; var esc = false
-      var going = true
-      while (i < obj.length && going) {
-        val c = obj.charAt(i)
-        if (inStr) {
-          if (esc) esc = false
-          else if (c == '\\') esc = true
-          else if (c == '"') inStr = false
-        } else c match {
-          case '"'       => inStr = true
-          case '{' | '[' => depth += 1
-          case '}' | ']' => depth -= 1; if (depth == 0) going = false
-          case _         =>
-        }
-        i += 1
-      }
-    }
-
-    val numberChars = "+-0123456789.eE"
-    var done = false
-    while (i < obj.length && !done) {
-      skipWs()
-      if (i >= obj.length || obj.charAt(i) == '}') done = true
-      else if (obj.charAt(i) == ',') i += 1
-      else if (obj.charAt(i) == '"') {
-        val key = unescape(scanString())
-        skipWs()
-        if (i < obj.length && obj.charAt(i) == ':') {
-          i += 1; skipWs()
-          if (i < obj.length) obj.charAt(i) match {
-            case '"' =>
-              m += key -> Scalar(unescape(scanString()), Scalar.Str)
-            case '{' | '[' =>
-              skipComposite() // non-flat value: skip, keep only flat scalars
-            case c if numberChars.indexOf(c.toInt) >= 0 =>
-              val start = i
-              while (i < obj.length && numberChars.indexOf(obj.charAt(i).toInt) >= 0) i += 1
-              m += key -> Scalar(obj.substring(start, i), Scalar.Num)
-            case 't' | 'f' | 'n' =>
-              val start = i
-              while (i < obj.length && obj.charAt(i).isLetter) i += 1
-              m += key -> Scalar(obj.substring(start, i), Scalar.Lit)
-            case _ => i += 1
-          }
-        }
-      } else i += 1
-    }
-    m.result()
-  }
-
-  /** Extract the raw `{...}` subtree of a top-level (or nested) object key,
-    * string-aware brace matching — lets config parsing descend the
-    * reference's two-level config.json shape without a JSON library.
-    */
-  def subObject(body: String, key: String): Option[String] = {
-    val keyIdx = body.indexOf("\"" + key + "\"")
-    if (keyIdx < 0) None
-    else {
-      val colon = body.indexOf(':', keyIdx)
-      if (colon < 0) None
-      else {
-        var i = colon + 1
-        while (i < body.length && body.charAt(i).isWhitespace) i += 1
-        if (i >= body.length || body.charAt(i) != '{') None
-        else {
-          val start = i
-          var depth = 0; var inStr = false; var esc = false
-          while (i < body.length) {
-            val c = body.charAt(i)
-            if (inStr) {
-              if (esc) esc = false
-              else if (c == '\\') esc = true
-              else if (c == '"') inStr = false
-            } else c match {
-              case '"' => inStr = true
-              case '{' => depth += 1
-              case '}' => depth -= 1; if (depth == 0) return Some(body.substring(start, i + 1))
-              case _ =>
-            }
-            i += 1
-          }
-          None
-        }
-      }
-    }
-  }
-
   /** Parse a JSON number literal as an epoch-millis long: integer fast path,
     * decimal/exponent forms (`1.5e9`) via double — exact for any whole value
     * below 2^53, which covers epoch millis for the next ~280k years. A JS
@@ -371,31 +243,4 @@ private[graft] object Json {
     s.toLongOption.orElse(s.toDoubleOption.collect {
       case d if d.isWhole && math.abs(d) <= (1L << 53) => d.toLong
     })
-
-  /** Single-pass JSON string unescape — sequential replace passes corrupt
-    * adjacent sequences (e.g. literal backslash + 'n' becoming a newline).
-    */
-  private def unescape(s: String): String = {
-    val out = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n'  => out.append('\n'); i += 2
-          case 'r'  => out.append('\r'); i += 2
-          case 't'  => out.append('\t'); i += 2
-          case 'b'  => out.append('\b'); i += 2
-          case 'f'  => out.append('\f'); i += 2
-          case '"'  => out.append('"'); i += 2
-          case '/'  => out.append('/'); i += 2
-          case '\\' => out.append('\\'); i += 2
-          case 'u' if i + 5 < s.length + 1 && i + 6 <= s.length =>
-            out.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => out.append(other); i += 2
-        }
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
 }

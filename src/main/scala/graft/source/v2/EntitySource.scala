@@ -1,7 +1,7 @@
 package graft.source.v2
 
 import graft.model.{EntityType, Model}
-import graft.source.{EntityApiSource, Json}
+import graft.source.EntityApiSource
 import graft.state.EntityStateStore
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
@@ -26,6 +26,11 @@ import scala.jdk.CollectionConverters._
   * paginated fetch loop (app.js:48-59) including the stall-breaker bump
   * (cache.js:114-117), and the predicate travels inside the URL — the
   * reference's hand-built pushdown, kept (SURVEY.md §4).
+  *
+  * Rows are built by [[EntityApiSource.parseEntity]], the parser the ETL
+  * loop uses: each value renders from the value alone (the rule in
+  * [[graft.source.Json]]), so an entity yields the same attrs, hence the
+  * same content hash, through either path and on any page.
   *
   * Options:
   *   - `urlTemplate`     e.g. http://host/v2/entities?type={{type}}&updatedFromMs={{updatedFromMs}}
@@ -102,13 +107,8 @@ class EntityTable(config: EntitySourceConfig) extends Table with SupportsRead {
   * the previous page's max event time).
   */
 object PageDrain {
-  /** Drained items grouped BY PAGE: v1's `spark.read.json` infers one type
-    * per column per page, so page membership decides which integral values
-    * render through the double path (see [[EntityScan.pageWidenKeys]]) —
-    * flattening here would lose that and re-introduce v1<->v2 hash drift.
-    */
   def drain(config: EntitySourceConfig, from: Long,
-            maxPages: Int = Int.MaxValue): (Seq[Seq[String]], Long) =
+            maxPages: Int = Int.MaxValue): (Seq[String], Long) =
     walk(config, from, maxPages, retain = true)
 
   /** Walk the pagination loop to the current backlog end WITHOUT retaining
@@ -120,23 +120,29 @@ object PageDrain {
     walk(config, from, Int.MaxValue, retain = false)._2
 
   private def walk(config: EntitySourceConfig, from: Long, maxPages: Int,
-                   retain: Boolean): (Seq[Seq[String]], Long) = {
+                   retain: Boolean): (Seq[String], Long) = {
     val fetch = config.fetch
-    val items = Seq.newBuilder[Seq[String]]
+    val items = Seq.newBuilder[String]
     var checkpoint = from
     var partial = true
     var pages = 0
     while (partial && pages < maxPages) {
       pages += 1
       val page = EntityApiSource.fetchPage(fetch, config.urlTemplate, config.entityType, checkpoint)
-      if (retain && page.items.nonEmpty) items += page.items
-      val maxTs = page.items.flatMap(Json.parseFlatObject(_).get(Model.UpdatedOnMs))
-        .flatMap(Json.numberToLong)
+      if (retain) items ++= page.items
+      val maxTs = page.items.flatMap(updatedOnMs(config, _))
       checkpoint = EntityStateStore.nextCheckpoint(maxTs.maxOption, checkpoint, page.partialResults)
       partial = page.partialResults
     }
     (items.result(), checkpoint)
   }
+
+  private def updatedOnMs(config: EntitySourceConfig, item: String): Option[Long] =
+    EntityApiSource.parseEntity(item, config.entityType.uniqueIdField)._2
+
+  /** Items no newer than `end`; an item without a valid updatedOnMs stays. */
+  def upTo(config: EntitySourceConfig, items: Seq[String], end: Long): Seq[String] =
+    items.filter(updatedOnMs(config, _).forall(_ <= end))
 }
 
 class EntityScan(config: EntitySourceConfig) extends Scan {
@@ -156,38 +162,16 @@ class EntityScan(config: EntitySourceConfig) extends Scan {
 }
 
 object EntityScan {
-  /** Keys v1's PER-PAGE schema inference types as DOUBLE because at least
-    * one item on the page carries a fractional/exponent value for them: the
-    * reader must render INTEGRAL values of those keys through the double
-    * path too ("2" -> "2.0"), or a page mixing {"n":2} and {"n":2.5} hashes
-    * differently through the two source paths and the entity is re-emitted
-    * on a v1<->v2 migration. (A page whose values for a key are uniformly
-    * integral keeps the long rendering, matching v1's long column.)
-    */
-  private[v2] def pageWidenKeys(page: Seq[String]): Set[String] =
-    page.iterator.flatMap(item => Json.parseFlatObjectTyped(item).collect {
-      case (k, s) if s.kind == Json.Scalar.Num && !s.raw.matches("-?\\d+") => k
-    }).toSet
-
-  /** Split drained pages into input partitions (rows were fetched on the
+  /** Split drained items into input partitions (rows were fetched on the
     * driver; executors parse them — parallelism in parse + downstream).
-    * Each item carries its page's widen-key set so chunking is free to
-    * cross page boundaries.
     */
-  def partition(pages: Seq[Seq[String]], idField: String, slices: Int = 8): Array[InputPartition] = {
-    val tagged = pages.flatMap { page =>
-      val widen = pageWidenKeys(page)
-      page.map(item => (item, widen))
-    }
-    if (tagged.isEmpty) Array.empty
-    else tagged.grouped(math.max(1, math.ceil(tagged.size.toDouble / slices).toInt))
-      .map(chunk => EntityInputPartition(chunk.map(_._1).toArray, idField,
-        chunk.map(_._2).toArray): InputPartition).toArray
-  }
+  def partition(items: Seq[String], idField: String, slices: Int = 8): Array[InputPartition] =
+    if (items.isEmpty) Array.empty
+    else items.grouped(math.max(1, math.ceil(items.size.toDouble / slices).toInt))
+      .map(chunk => EntityInputPartition(chunk.toArray, idField): InputPartition).toArray
 }
 
-final case class EntityInputPartition(items: Array[String], idField: String,
-    widenKeys: Array[Set[String]]) extends InputPartition
+final case class EntityInputPartition(items: Array[String], idField: String) extends InputPartition
 
 /** Streaming offset = the entity checkpoint (epoch millis). */
 final case class CheckpointOffset(ms: Long) extends Offset {
@@ -197,8 +181,8 @@ final case class CheckpointOffset(ms: Long) extends Offset {
 class EntityMicroBatchStream(config: EntitySourceConfig)
     extends MicroBatchStream with SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  // pages drained for the current (start, end] window, keyed by end offset
-  @volatile private var pending: (Long, Seq[Seq[String]]) = (config.startCheckpoint, Seq.empty)
+  // items drained for the current (start, end] window, keyed by end offset
+  @volatile private var pending: (Long, Seq[String]) = (config.startCheckpoint, Seq.empty)
   // AvailableNow: the backlog end fixed at prepare time; batches never pass it
   @volatile private var availableNowEnd: Option[Long] = None
   @volatile private var availableNowActive: Boolean = false
@@ -246,11 +230,7 @@ class EntityMicroBatchStream(config: EntitySourceConfig)
     // target belong to the next run, and the offset must converge to the
     // target so the query terminates even while new data keeps arriving
     val (items, next) = availableNowEnd match {
-      case Some(end) =>
-        // filter WITHIN each page: page membership decides type widening
-        (drained.map(_.filter(Json.parseFlatObject(_).get(Model.UpdatedOnMs)
-          .flatMap(Json.numberToLong).forall(_ <= end))),
-          math.min(drainedNext, end))
+      case Some(end) => (PageDrain.upTo(config, drained, end), math.min(drainedNext, end))
       case None => (drained, drainedNext)
     }
     if (next != from) pending = (next, items)
@@ -274,11 +254,7 @@ class EntityMicroBatchStream(config: EntitySourceConfig)
         // from its original contents
         val drained =
           PageDrain.drain(config, start.asInstanceOf[CheckpointOffset].ms, config.maxPagesPerBatch)._1
-        drained.map(_.filter { item =>
-          Json.parseFlatObject(item).get(Model.UpdatedOnMs)
-            .flatMap(Json.numberToLong)
-            .forall(_ <= endMs)
-        })
+        PageDrain.upTo(config, drained, endMs)
       }
     EntityScan.partition(items, config.entityType.uniqueIdField)
   }
@@ -296,26 +272,10 @@ object EntityReaderFactory extends PartitionReaderFactory {
       private var i = -1
       override def next(): Boolean = { i += 1; i < p.items.length }
       override def get(): InternalRow = {
-        // flat string->scalar entities (SURVEY.md §1.1). Values normalize
-        // through Json.normalizeScalar — the SAME strings the v1 pageToDf
-        // path (spark.read.json + string cast) produces, with JSON nulls
-        // dropped: an entity parsed by either source path yields an
-        // identical attrs map, hence an identical content hash; raw
-        // literals ("1.50", "null") would mark every such entity changed
-        // on a v1<->v2 migration.
-        val obj = Json.parseFlatObjectTyped(p.items(i))
-        // the item's PAGE decides per-key double widening (v1 infers one
-        // type per column per page — EntityScan.pageWidenKeys)
-        val widen = p.widenKeys(i)
-        val id = obj.get(p.idField).flatMap(s => Json.normalizeScalar(s, widen(p.idField)))
-          .map(UTF8String.fromString).orNull
-        val updated = obj.get(Model.UpdatedOnMs).map(_.raw).flatMap(Json.numberToLong)
-        val attrs = (obj - Model.UpdatedOnMs).flatMap { case (k, s) =>
-          Json.normalizeScalar(s, widen(k)).map(k -> _)
-        }
+        val (id, updated, attrs) = EntityApiSource.parseEntity(p.items(i), p.idField)
         val keys = attrs.keys.toArray.map(k => UTF8String.fromString(k): AnyRef)
         val vals = attrs.values.toArray.map(v => UTF8String.fromString(v): AnyRef)
-        InternalRow(id,
+        InternalRow(id.map(UTF8String.fromString).orNull,
           updated.map(Long.box).orNull,
           ArrayBasedMapData(keys, vals))
       }

@@ -54,6 +54,11 @@ final class EntityStateStore(spark: SparkSession, root: String) {
     *  3. advance the checkpoint;
     *  4. swap in the parquet dir with its `_checkpoint`.
     *
+    * `state` is this type's loaded state ([[load]]); the page loop passes
+    * the frame its CDC join read, so a page scans state once. The write
+    * materializes into a tmp dir before the swap, so reading the live dir
+    * it came from is safe.
+    *
     * `batch` columns: id, entityJson, entityHash (updatedOnMs already
     * stripped from json/hash by the caller — cache.js:53, see
     * [[graft.cdc.ChangeFilter.withContentColumns]]; pass it as an extra
@@ -67,12 +72,7 @@ final class EntityStateStore(spark: SparkSession, root: String) {
       nowMs: Long,
       ttlMs: Long,
       newCheckpoint: Long,
-      // the page loop already loaded state for the CDC join; passing it in
-      // halves the per-page scans of the dominant dataset (the write below
-      // materializes into a tmp dir BEFORE the swap, so reading the live
-      // dir it came from is safe)
-      preloadedState: Option[DataFrame] = None): Unit = {
-    val state = preloadedState.getOrElse(load(entityType)._1)
+      state: DataFrame): Unit = {
     val fresh = StateStores.dedupNewestPerId(batch)
       .select(col("id"), lit(nowMs + ttlMs).as("ttl"), col("entityJson"), col("entityHash"))
 

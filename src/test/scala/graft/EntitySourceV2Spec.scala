@@ -132,28 +132,23 @@ class EntitySourceV2Spec extends SparkSpec {
     assert(shape(v2) == shape(v1))
   }
 
-  test("v1/v2 parity: a page-column mixing integral and fractional widens the integral to the double rendering") {
-    // v1 infers ONE type per column per page: {"n":2} next to {"n":2.5}
-    // makes `n` a double column, so 2 renders "2.0" — v2 must match or the
-    // content hash differs and the entity is re-emitted on migration. `m`
-    // is uniformly integral on the page and must KEEP the long rendering.
-    val items = Seq(
-      """{"uid": "m1", "n": 2, "m": 7, "updatedOnMs": 100}""",
-      """{"uid": "m2", "n": 2.5, "m": 8, "updatedOnMs": 150}""")
+  test("page independence: a value renders alone, whatever else its page holds") {
+    // {"n":2} shares page 1 with {"n":2.5}, and is re-fetched alone on
+    // page 2 with the same content: both copies must hash the same, or the
+    // CDC filter re-sends an unchanged entity
     MutableBacklogFetcherFactory.pages = Map(
-      1L -> s"""{"items": [${items.mkString(",")}], "partialResults": false}""")
+      1L -> """{"items": [{"uid": "m1", "n": 2, "updatedOnMs": 100},
+        |                {"uid": "m2", "n": 2.5, "updatedOnMs": 150}], "partialResults": true}""".stripMargin,
+      150L -> """{"items": [{"uid": "m1", "n": 2, "updatedOnMs": 200}], "partialResults": false}""")
     val v2 = spark.read.format("graft-entities")
       .option("urlTemplate", "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}")
       .option("type", "widget").option("uniqueIdField", "uid")
       .option("fetcherClass", classOf[MutableBacklogFetcherFactory].getName)
       .load()
-    val v1 = EntityApiSource.pageToDf(spark,
-      EntityApiSource.Page(items, partialResults = false), EntityType("widget", "uid"))
-    def shape(df: org.apache.spark.sql.DataFrame) =
-      df.select($"id", element_at($"attrs", "n"), element_at($"attrs", "m"))
-        .as[(String, String, String)].collect().sorted.toSeq
-    assert(shape(v2) == Seq(("m1", "2.0", "7"), ("m2", "2.5", "8")))
-    assert(shape(v2) == shape(v1))
+    val rows = graft.cdc.ChangeFilter.withContentColumns(v2)
+      .select($"id", element_at($"attrs", "n"), $"entityHash").as[(String, String, String)].collect()
+    assert(rows.map(r => (r._1, r._2)).sorted.toSeq == Seq(("m1", "2"), ("m1", "2"), ("m2", "2.5")))
+    assert(rows.filter(_._1 == "m1").map(_._3).distinct.length == 1)
   }
 
   test("checkpoint option starts mid-stream (URL pushdown of the predicate)") {

@@ -29,11 +29,13 @@ class EntityStateStoreSpec extends SparkSpec {
 
   test("commit/load roundtrip with upsert and checkpoint (cache.test.js:36-61)") {
     val store = freshStore()
-    store.commit("t", batch("1" -> "h1", "2" -> "h2"), nowMs = 1000, ttlMs = 500, newCheckpoint = 42)
+    store.commit("t", batch("1" -> "h1", "2" -> "h2"), nowMs = 1000, ttlMs = 500, newCheckpoint = 42,
+      state = store.load("t")._1)
     val (df1, ckpt1) = store.load("t")
     assert(ckpt1 == 42 && df1.count() == 2)
     // upsert overwrites by id, keeps survivors
-    store.commit("t", batch("2" -> "h2b", "3" -> "h3"), nowMs = 1100, ttlMs = 500, newCheckpoint = 50)
+    store.commit("t", batch("2" -> "h2b", "3" -> "h3"), nowMs = 1100, ttlMs = 500, newCheckpoint = 50,
+      state = store.load("t")._1)
     val (df2, ckpt2) = store.load("t")
     assert(ckpt2 == 50)
     val m = df2.select("id", "entityHash").as[(String, String)].collect().toMap
@@ -42,10 +44,12 @@ class EntityStateStoreSpec extends SparkSpec {
 
   test("TTL eviction at commit time (cache.test.js:63-74) + refresh for touched ids") {
     val store = freshStore()
-    store.commit("t", batch("old" -> "h", "touched" -> "h"), nowMs = 1000, ttlMs = 100, newCheckpoint = 1)
+    store.commit("t", batch("old" -> "h", "touched" -> "h"), nowMs = 1000, ttlMs = 100, newCheckpoint = 1,
+      state = store.load("t")._1)
     // at now=1200 both ttls (1100) expired; "touched" re-appears in the batch
     // (TTL refresh side effect, cache.js:79), "old" is evicted
-    store.commit("t", batch("touched" -> "h"), nowMs = 1200, ttlMs = 100, newCheckpoint = 2)
+    store.commit("t", batch("touched" -> "h"), nowMs = 1200, ttlMs = 100, newCheckpoint = 2,
+      state = store.load("t")._1)
     val ids = store.load("t")._1.select("id").as[String].collect().toSeq
     assert(ids == Seq("touched"))
   }
@@ -69,7 +73,8 @@ class EntityStateStoreSpec extends SparkSpec {
 
   test("commit survives repeated ids within one page (overlap re-fetch, W3)") {
     val store = freshStore()
-    store.commit("t", batch("1" -> "ha", "1" -> "ha"), nowMs = 1, ttlMs = 10, newCheckpoint = 1)
+    store.commit("t", batch("1" -> "ha", "1" -> "ha"), nowMs = 1, ttlMs = 10, newCheckpoint = 1,
+      state = store.load("t")._1)
     assert(store.load("t")._1.count() == 1)
   }
 
@@ -80,7 +85,8 @@ class EntityStateStoreSpec extends SparkSpec {
     val b = Seq(("1", 10L, "aaa-old"), ("1", 20L, "zzz-new"))
       .toDF("id", Model.UpdatedOnMs, "entityHash")
       .withColumn("entityJson", lit("{}"))
-    store.commit("t", b, nowMs = 1, ttlMs = 10, newCheckpoint = 1)
+    store.commit("t", b, nowMs = 1, ttlMs = 10, newCheckpoint = 1,
+      state = store.load("t")._1)
     val kept = store.load("t")._1.select("entityHash").as[String].collect().toSeq
     assert(kept == Seq("zzz-new"))
   }
@@ -88,7 +94,7 @@ class EntityStateStoreSpec extends SparkSpec {
   test("K5 commitMerge tombstone round-trip: delete + update + insert in one commit") {
     val store = freshStore()
     store.commit("t", batch("a" -> "h1", "b" -> "h2", "c" -> "h3"),
-      nowMs = 1000, ttlMs = 1000, newCheckpoint = 1)
+      nowMs = 1000, ttlMs = 1000, newCheckpoint = 1, state = store.load("t")._1)
     // one merge page: tombstone a, update b, insert d (c untouched)
     val actions = Seq(("a", "{}", "x", "delete"), ("b", "{}", "h2b", "upsert"),
         ("d", "{}", "h4", "upsert"))

@@ -108,7 +108,7 @@ class PipelineSpec extends SparkSpec {
       1L -> EntityApiSource.Page(
         Seq(entity(1, "a", 10), """{"x": "no-id", "updatedOnMs": 50}""", entity(2, "b", 20)),
         partialResults = true),
-      // no row carries an id: pageToDf maps the missing column to null ids
+      // no row carries an id: every row gets a null id
       50L -> EntityApiSource.Page(Seq("""{"x": "no-id", "updatedOnMs": 60}"""), partialResults = false))
     val stats = mkJob(store, pages).runType(EntityType("t", "id"))
     assert(stats.map(s => (s.fetched, s.dropped, s.emitted)) == Seq((2, 1, 2), (0, 1, 0)))
@@ -134,6 +134,67 @@ class PipelineSpec extends SparkSpec {
     assert(outcomes.distinct.size == 1, s"the tie-break depends on page order: $outcomes")
   }
 
+  test("page independence: an entity re-fetched with the same content is not re-sent, whatever its first page held") {
+    sentBodies.clear(); failSends = false
+    val store = new EntityStateStore(spark, Files.createTempDirectory("pl-indep").toString)
+    val pages = Map(
+      1L -> EntityApiSource.Page(Seq("""{"id": "m1", "n": 2, "updatedOnMs": 10}""",
+        """{"id": "m2", "n": 2.5, "updatedOnMs": 20}"""), partialResults = true),
+      20L -> EntityApiSource.Page(Seq("""{"id": "m1", "n": 2, "updatedOnMs": 30}"""), partialResults = false))
+    val stats = mkJob(store, pages).runType(EntityType("t", "id"))
+    assert(stats.map(_.emitted) == Seq(2, 0))
+  }
+
+  test("numeric ids render alone: id 7 beside 7.5 keeps one state row for \"7\"") {
+    sentBodies.clear(); failSends = false
+    val store = new EntityStateStore(spark, Files.createTempDirectory("pl-numid").toString)
+    val pages = Map(
+      1L -> EntityApiSource.Page(Seq("""{"id": 7, "x": "a", "updatedOnMs": 10}""",
+        """{"id": 7.5, "x": "b", "updatedOnMs": 20}"""), partialResults = true),
+      20L -> EntityApiSource.Page(Seq("""{"id": 7, "x": "a", "updatedOnMs": 30}"""), partialResults = false))
+    val stats = mkJob(store, pages).runType(EntityType("t", "id"))
+    assert(stats.map(_.emitted) == Seq(2, 0))
+    val ids = store.load("t")._1.select("id").collect().map(_.getString(0)).sorted.toSeq
+    assert(ids == Seq("7", "7.5"))
+  }
+
+  test("keys that differ only in case commit both, on one entity or split across two") {
+    val pages = Seq(
+      Seq("""{"id": "c1", "aws_tag_Name": "web", "aws_tag_name": "db", "updatedOnMs": 10}"""),
+      Seq("""{"id": "c2", "aws_tag_Name": "web", "updatedOnMs": 10}""",
+        """{"id": "c3", "aws_tag_name": "db", "updatedOnMs": 10}"""))
+    pages.foreach { items =>
+      sentBodies.clear(); failSends = false
+      val store = new EntityStateStore(spark, Files.createTempDirectory("pl-case").toString)
+      mkJob(store, Map(1L -> EntityApiSource.Page(items, partialResults = false))).runType(EntityType("t", "id"))
+      val (state, ckpt) = store.load("t")
+      val cached = state.select("entityJson").collect().map(_.getString(0)).mkString
+      assert(ckpt == 10 && state.count() == items.size)
+      assert(cached.contains(""""key":"aws_tag_Name","value":"web"""") &&
+        cached.contains(""""key":"aws_tag_name","value":"db""""), cached)
+    }
+  }
+
+  test("a string updatedOnMs such as \"abc\" leaves the checkpoint max; the page commits") {
+    sentBodies.clear(); failSends = false
+    val store = new EntityStateStore(spark, Files.createTempDirectory("pl-badts").toString)
+    val items = Seq(entity(1, "a", 10), """{"id": "2", "x": "b", "updatedOnMs": "abc"}""", entity(3, "c", 20))
+    val stats = mkJob(store, Map(1L -> EntityApiSource.Page(items, partialResults = false)))
+      .runType(EntityType("t", "id"))
+    assert(stats.map(s => (s.fetched, s.emitted, s.checkpoint)) == Seq((3, 3, 20)))
+    assert(store.load("t")._2 == 20 && store.load("t")._1.count() == 3)
+  }
+
+  test("a malformed item drops alone and counts as dropped") {
+    sentBodies.clear(); failSends = false
+    val store = new EntityStateStore(spark, Files.createTempDirectory("pl-malformed").toString)
+    val items = Seq(entity(1, "a", 10), """{"id": "x" "n": 1}""", entity(2, "b", 20))
+    val stats = mkJob(store, Map(1L -> EntityApiSource.Page(items, partialResults = false)))
+      .runType(EntityType("t", "id"))
+    assert(stats.map(s => (s.fetched, s.dropped, s.emitted, s.checkpoint)) == Seq((2, 1, 2, 20)))
+    assert(store.load("t")._1.count() == 2)
+  }
+
   test("processPage runs no head or count: only the source read, the send and the commit") {
     sentBodies.clear(); failSends = false
     val store = new EntityStateStore(spark, Files.createTempDirectory("pl-actions").toString)
@@ -152,8 +213,8 @@ class PipelineSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
     val seen = actions.asScala.toSeq
     assert(!seen.contains("head") && !seen.contains("count"), s"page actions: $seen")
-    // the source read (JSON schema inference), the send, the commit's write
-    assert(seen == Seq("rdd", "foreachPartition", "command"), s"page actions: $seen")
+    // the send (which parses the page in its tasks) and the commit's write
+    assert(seen == Seq("foreachPartition", "command"), s"page actions: $seen")
     assert(store.load("t")._2 == 20 && store.load("t")._1.count() == 2)
   }
 

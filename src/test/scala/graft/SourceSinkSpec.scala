@@ -51,18 +51,25 @@ class SourceSinkSpec extends SparkSpec {
     assert(graft.cdc.ChangeFilter.dropMissingId(df, "id").count() == 0)
   }
 
-  test("normalizeScalar reproduces the v1 json-read stringification: nulls drop, numbers normalize, strings pass") {
-    import graft.source.Json.{normalizeScalar, parseFlatObjectTyped}
-    val m = parseFlatObjectTyped(
-      """{"s": "1.50", "d": 1.50, "i": 2, "big": 12345678901234567890, "t": true, "z": null, "e": 1.5e9}""")
-    def norm(k: String) = normalizeScalar(m(k))
-    assert(norm("s").contains("1.50"))  // STRING "1.50" stays verbatim
-    assert(norm("d").contains("1.5"))   // NUMBER 1.50 renders like a double cast
-    assert(norm("i").contains("2"))     // integral stays integral (no ".0")
-    assert(norm("big").contains("12345678901234567890")) // beyond Long: digits kept
-    assert(norm("t").contains("true"))
-    assert(norm("z").isEmpty)           // JSON null drops, like v1's map_filter
-    assert(norm("e").contains("1.5E9")) // exponent renders like Double.toString
+  test("parseEntity renders each value alone: nulls drop, numbers normalize, strings pass") {
+    val (id, updated, m) = EntityApiSource.parseEntity(
+      """{"uid": "u1", "s": "1.50", "d": 1.50, "i": 2, "big": 12345678901234567890, "t": true, "z": null,
+        |"e": 1.5e9, "updatedOnMs": 7}""".stripMargin, "uid")
+    assert(id.contains("u1") && m("uid") == "u1")
+    assert(m("s") == "1.50")  // STRING "1.50" stays verbatim
+    assert(m("d") == "1.5")   // NUMBER 1.50 renders through Double.toString
+    assert(m("i") == "2")     // integral stays integral (no ".0")
+    assert(m("big") == "12345678901234567890") // beyond Long: digits kept
+    assert(m("t") == "true")
+    assert(!m.contains("z"))  // JSON null drops its key
+    assert(m("e") == "1.5E9") // exponent renders like Double.toString
+    // updatedOnMs leaves attrs; it is numberToLong of a number or a string
+    assert(updated.contains(7L) && !m.contains("updatedOnMs"))
+    def ts(v: String) = EntityApiSource.parseEntity(s"""{"uid": "u", "updatedOnMs": $v}""", "uid")._2
+    assert(ts("1.5e9").contains(1500000000L) && ts("\"100\"").contains(100L))
+    assert(ts("\"abc\"").isEmpty && ts("1.5").isEmpty && ts("true").isEmpty && ts("null").isEmpty)
+    // an item that is not a JSON object has no id (F3 drops it)
+    assert(EntityApiSource.parseEntity("""{"uid": "x" "n": 1}""", "uid") == ((None, None, Map.empty)))
   }
 
   test("header templates fail fast at construction: malformed or unset env refs") {
@@ -91,10 +98,22 @@ class SourceSinkSpec extends SparkSpec {
     }
   }
 
-  test("property: parseFlatObject agrees with spark.read.json on generated flat payloads") {
-    // deterministic generator (fixed seed): ~80 payloads mixing strings with
-    // escapes/unicode, integer/decimal/exponent numbers, booleans, nulls,
-    // and nested composites (which parseFlatObject must skip, not hoist)
+  test("property: pageToDf agrees with the per-page spark.read.json reading when each key keeps one JSON kind") {
+    // reference: the former pageToDf (per-page schema inference, string
+    // cast, nulls dropped), which renders every value the same way as the
+    // one rendering rule when no key mixes JSON kinds on a page
+    def readJsonPage(items: Seq[String], idField: String) = {
+      import org.apache.spark.sql.functions._
+      val raw = spark.read.json(spark.createDataset(items))
+      val attrCols = raw.columns.filterNot(_ == "updatedOnMs")
+      val attrs = map(attrCols.flatMap(c => Seq(lit(c), col(s"`$c`").cast("string"))): _*)
+      def orNull(c: String, t: String) = if (raw.columns.contains(c)) col(s"`$c`").cast(t) else lit(null).cast(t)
+      raw.select(orNull(idField, "string"), orNull("updatedOnMs", "long"),
+        map_filter(attrs, (_, v) => v.isNotNull))
+    }
+    // deterministic generator (fixed seed): keys shared across a page's
+    // items, each key with one kind (integer, exponent, decimal, boolean,
+    // string with escapes/unicode), values sometimes null or absent
     val rnd = new scala.util.Random(42)
     val stringAlphabet = "abcXYZ 09_\"\\\n\té√"
     def jsonEscape(s: String): String = s.flatMap {
@@ -102,55 +121,28 @@ class SourceSinkSpec extends SparkSpec {
       case '\t' => "\\t"; case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     }
-    // per-field: (json fragment, expected parsed value or None when skipped)
-    def genField(name: String): (String, Option[String]) = rnd.nextInt(7) match {
-      case 0 => val v = rnd.between(-1000000L, 1000000L); (s""""$name": $v""", Some(v.toString))
-      case 1 => val v = s"${rnd.between(1, 99)}.${rnd.between(0, 99)}e${rnd.between(-9, 9)}"
-                (s""""$name": $v""", Some(v))
-      case 2 => val v = s"-${rnd.between(0, 99)}.${rnd.between(1, 99)}"
-                (s""""$name": $v""", Some(v))
-      case 3 => val v = rnd.nextBoolean().toString; (s""""$name": $v""", Some(v))
-      case 4 => (s""""$name": null""", Some("null"))
-      case 5 => // nested composite: skipped whole by the flat parser
-        val inner = if (rnd.nextBoolean()) """{"x": 1, "y": [2, {"z": "3"}]}""" else """[1, {"a": "b"}, []]"""
-        (s""""$name": $inner""", None)
-      case _ =>
-        val v = (0 until rnd.between(0, 12)).map(_ => stringAlphabet(rnd.nextInt(stringAlphabet.length))).mkString
-        (s""""$name": "${jsonEscape(v)}"""", Some(v))
+    def genValue(kind: Int): String = kind match {
+      case 0 => rnd.between(-1000000L, 1000000L).toString
+      case 1 => s"${rnd.between(1, 99)}.${rnd.between(0, 99)}e${rnd.between(-9, 9)}"
+      case 2 => s"-${rnd.between(0, 99)}.${rnd.between(1, 99)}"
+      case 3 => rnd.nextBoolean().toString
+      case _ => "\"" + jsonEscape((0 until rnd.between(0, 12))
+        .map(_ => stringAlphabet(rnd.nextInt(stringAlphabet.length))).mkString) + "\""
     }
-    val payloads = (0 until 80).map { j =>
-      val fields = (0 until rnd.between(1, 8)).map(i => genField(s"p${j}_f$i"))
-      (s"{${fields.map(_._1).mkString(", ")}}", fields)
-    }
-    val parsed = payloads.map(p => Json.parseFlatObject(p._1))
-    // spark.read.json over the same payloads: the schema-merged DataFrame is
-    // the ground truth for which fields exist and what they contain
-    val df = spark.read.json(spark.createDataset(payloads.map(_._1)))
-    val rows = df.collect()
-    val schema = df.schema
-    rows.zip(parsed).zipWithIndex.foreach { case ((row, flat), j) =>
-      schema.fields.foreach { f =>
-        val sv = row.get(row.fieldIndex(f.name))
-        f.dataType match {
-          case _: org.apache.spark.sql.types.StructType | _: org.apache.spark.sql.types.ArrayType =>
-            // nested: the flat parser must not expose the key at all
-            assert(!flat.contains(f.name), s"payload $j: nested ${f.name} hoisted")
-          case _ if sv == null =>
-            // absent in this payload, or a JSON null literal
-            assert(!flat.contains(f.name) || flat(f.name) == "null",
-              s"payload $j: ${f.name} null in spark but '${flat.get(f.name)}' in flat parser")
-          case _: org.apache.spark.sql.types.StringType =>
-            assert(flat(f.name) == sv.asInstanceOf[String],
-              s"payload $j: ${f.name} string mismatch")
-          case _: org.apache.spark.sql.types.BooleanType =>
-            assert(flat(f.name).toBoolean == sv.asInstanceOf[Boolean])
-          case _ => // long or double: compare numerically (raw text is kept)
-            assert(flat(f.name).toDouble == sv.toString.toDouble,
-              s"payload $j: ${f.name} number mismatch: flat=${flat(f.name)} spark=$sv")
+    (0 until 30).foreach { p =>
+      val kinds = (0 until rnd.between(1, 7)).map(k => s"k$k" -> rnd.nextInt(5))
+      val items = (0 until rnd.between(1, 7)).map { i =>
+        val fields = kinds.filter(_ => rnd.nextInt(4) > 0).map { case (k, kind) =>
+          s""""$k": ${if (rnd.nextInt(10) == 0) "null" else genValue(kind)}"""
         }
+        val id = if (rnd.nextInt(10) == 0) Nil else Seq(s""""uid": "u${p}_$i"""")
+        (id ++ fields :+ s""""updatedOnMs": ${rnd.between(1L, 1000000L)}""").mkString("{", ", ", "}")
       }
-      // completeness the other way: every flat-parsed key is a real field
-      flat.keys.foreach(k => assert(schema.fieldNames.contains(k), s"payload $j: phantom key $k"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Option[String], Option[Long], Map[String, String])].collect().toSeq.sortBy(_.toString)
+      val got = rows(EntityApiSource.pageToDf(spark, EntityApiSource.Page(items, partialResults = false),
+        EntityType("t", "uid")))
+      assert(got == rows(readJsonPage(items, "uid")), s"page $p: ${items.mkString(" ")}")
     }
   }
 
@@ -164,17 +156,19 @@ class SourceSinkSpec extends SparkSpec {
     assert(Json.numberToLong("abc").isEmpty)
   }
 
-  test("parseFlatObject: exponent numbers parse; nested values are skipped whole") {
-    val m = Json.parseFlatObject(
+  test("parseEntity: exponent numbers parse; nested values render as compact JSON text") {
+    val (_, _, m) = EntityApiSource.parseEntity(
       """{"a": 1.5e9, "b": -2E-3, "neg": -7, "s": "x\"y", "t": true, "z": null,
         |"nested": {"inner": "HOISTED?", "deep": {"k": 1}}, "arr": [1, {"inArr": "no"}],
-        |"after": "kept"}""".stripMargin)
-    assert(m("a") == "1.5e9" && m("b") == "-2E-3" && m("neg") == "-7")
-    assert(m("s") == "x\"y" && m("t") == "true" && m("z") == "null")
+        |"after": "kept"}""".stripMargin, "id")
+    assert(m("a") == "1.5E9" && m("b") == "-0.002" && m("neg") == "-7")
+    assert(m("s") == "x\"y" && m("t") == "true" && !m.contains("z"))
     assert(m("after") == "kept")
-    // nested object/array pairs must NOT be hoisted to the top level
+    // nested object/array pairs are NOT hoisted to the top level ...
     assert(!m.contains("inner") && !m.contains("k") && !m.contains("inArr"))
-    assert(!m.contains("nested") && !m.contains("arr"))
+    // ... but kept whole, so a change inside them is still a change
+    assert(m("nested") == """{"inner":"HOISTED?","deep":{"k":1}}""")
+    assert(m("arr") == """[1,{"inArr":"no"}]""")
   }
 
   test("type catalog parse (S1, app.js:71-74)") {
@@ -182,6 +176,21 @@ class SourceSinkSpec extends SparkSpec {
       _ => """[{"name": "awsEc2", "uniqueIdField": "AWSUniqueId"}, {"name": "gce", "uniqueIdField": "gcp_id"}]""",
       "stub://types")
     assert(types == Seq(EntityType("awsEc2", "AWSUniqueId"), EntityType("gce", "gcp_id")))
+  }
+
+  test("a malformed type catalog or config file fails with an error that names it") {
+    val catalog = intercept[IllegalArgumentException] {
+      EntityApiSource.fetchEntityTypes(_ => """[{"name": "a" "uniqueIdField": "b"}]""", "stub://types")
+    }
+    assert(catalog.getMessage.contains("type catalog stub://types"), catalog.getMessage)
+    val notArray = intercept[IllegalArgumentException] {
+      EntityApiSource.fetchEntityTypes(_ => """{"name": "a"}""", "stub://types")
+    }
+    assert(notArray.getMessage.contains("type catalog stub://types"), notArray.getMessage)
+    val config = intercept[IllegalArgumentException] {
+      graft.pipeline.EtlConfig.fromJson("""{"sfx": {"server": "http://x",}}""")
+    }
+    assert(config.getMessage.contains("malformed JSON in config"), config.getMessage)
   }
 
   test("pageToDf normalizes to (id, updatedOnMs, attrs) with string-cast values") {
