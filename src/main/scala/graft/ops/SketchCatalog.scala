@@ -482,6 +482,12 @@ object SketchCatalog {
     * rows are written beside the store, which stays readable until the
     * swap) and returns the merged frame.
     *
+    * Compaction is not byte-stable: `hll_union_agg` rewrites every `hll`
+    * byte on each pass, even over an already compacted store, while the
+    * estimates (`distinct_est`) and the other columns stay equal. Any
+    * fingerprint of the `hll` column therefore changes on every
+    * maintenance cycle; compare estimates instead.
+    *
     * Disjointness is enforced via the stamped convention marker: the sum
     * is exact when each (table, key) group holds disjoint delta slices
     * plus AT MOST ONE full row (a previous [[compact]]'s output — the

@@ -90,12 +90,14 @@ final class EntityEtlJob(
     * counts and the checkpoint max are observed metrics of the send job
     * (df.observe): the page observation sits ahead of the missing-id
     * filter, because the checkpoint is a max over ALL fetched items
-    * (reference cache.js:100).
+    * (reference cache.js:100). The CDC join reads state through the page's
+    * ids ([[EntityStateStore.load]]), so it shuffles the page, not the
+    * state.
     */
   def processPage(entityType: EntityType, page: Page, prevCheckpoint: Long): PageStats = {
-    val (state, _) = store.load(entityType.name)
     val batch = ChangeFilter.withContentColumns(EntityApiSource.pageToDf(spark, page, entityType)).cache()
     try {
+      val (state, _) = store.load(entityType.name, Some(batch.select(col("id"))))
       val pageObs = new Observation(s"graft-page-${System.nanoTime()}")
       val observed = batch.observe(pageObs, count(lit(1)).as("rows"), count(col("id")).as("fetched"),
         max(col(Model.UpdatedOnMs)).as("maxUpdatedOnMs"))
@@ -124,7 +126,7 @@ final class EntityEtlJob(
       // commit AFTER send (W2). All fetched ids get a TTL refresh
       // (cache.js:79 runs before the change test), cached copy minus
       // updatedOnMs (cache.js:53).
-      store.commit(entityType.name, newest, now(), ttlMs, nextCkpt, state)
+      store.commit(entityType.name, newest, now(), ttlMs, nextCkpt, pageRows = fetched)
 
       log.info(s"${entityType.name}: fetched=$fetched dropped=$dropped " +
         s"emitted=$emitted batches=$batches checkpoint $prevCheckpoint -> $nextCkpt")

@@ -31,7 +31,11 @@ class FaultyFileSystem extends ShellFreeRawLocalFileSystem {
       permission: FsPermission): OutputStream = mutating(super.createOutputStreamWithMode(f, append, permission))
   override def mkdirs(f: Path): Boolean = mutating(super.mkdirs(f))
   override def mkdirs(f: Path, permission: FsPermission): Boolean = mutating(super.mkdirs(f, permission))
-  override def rename(src: Path, dst: Path): Boolean = mutating(super.rename(src, dst))
+  override def rename(src: Path, dst: Path): Boolean = mutating {
+    val done = super.rename(src, dst)
+    if (done) FaultyFileSystem.renamed.add(dst.getName)
+    done
+  }
   override def delete(f: Path, recursive: Boolean): Boolean = mutating(super.delete(f, recursive))
 }
 
@@ -42,7 +46,10 @@ object FaultyFileSystem {
   private val depth = ThreadLocal.withInitial[Integer](() => 0)
 
   /** Count mutating calls from zero; die at call `k` (never by default). */
-  def arm(k: Int = Int.MaxValue): Unit = { calls.set(0); dieAt = k }
+  /** Target names of the renames done since the last [[arm]]. */
+  val renamed = new ConcurrentLinkedQueue[String]()
+
+  def arm(k: Int = Int.MaxValue): Unit = { calls.set(0); dieAt = k; renamed.clear() }
   def mutatingCalls: Int = calls.get()
 
   private def mutating[A](call: => A): A = {
@@ -60,21 +67,26 @@ object CommitFaultSpec {
 
 /** Every crash point of the two on-disk commits ends in a replay, never in
   * lost state or a store that cannot be read: the per-page entity commit
-  * (state + checkpoint) and the sketch catalog's compaction.
+  * (state + checkpoint, as a delta and as a compaction) and the sketch
+  * catalog's compaction.
   */
 class CommitFaultSpec extends SparkSpec {
   import CommitFaultSpec._
-  import FaultyFileSystem.{arm, mutatingCalls}
+  import FaultyFileSystem.{arm, mutatingCalls, renamed}
 
   spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
 
   private val entityType = EntityType("t", "id")
   private def entity(id: Int, x: String, ts: Long): String =
     s"""{"id": "$id", "x": "$x", "updatedOnMs": $ts}"""
+  // 200 rows from page 1, so page 2 (3 rows) fits under the compaction
+  // share (5 rows) and commits as a delta; page 3 would take the deltas to
+  // 6 rows and commits as a compaction that drops the delta
   private val pages = Map(
-    1L -> EntityApiSource.Page(Seq(entity(1, "a", 10), entity(2, "b", 20), entity(3, "c", 20)), partialResults = true),
+    1L -> EntityApiSource.Page(Seq(entity(1, "a", 10), entity(2, "b", 20), entity(3, "c", 20)) ++
+      (100 until 297).map(entity(_, "z", 15)), partialResults = true),
     20L -> EntityApiSource.Page(Seq(entity(3, "c", 20), entity(2, "b2", 30), entity(4, "d", 30)), partialResults = true),
-    30L -> EntityApiSource.Page(Seq(entity(5, "e", 40)), partialResults = false))
+    30L -> EntityApiSource.Page(Seq(entity(5, "e", 40), entity(6, "f", 40), entity(4, "d", 30)), partialResults = false))
 
   /** Run the 3-page job over `root`, adding the checkpoint of every fetch
     * to `fetchedFrom` (a fetch from checkpoint c follows the commit of c).
@@ -114,14 +126,22 @@ class CommitFaultSpec extends SparkSpec {
     Files.list(dir).iterator().asScala.map(_.getFileName.toString)
       .filter(n => n.startsWith(s".$name.tmp-") || n.startsWith(s".$name.old-")).toSeq
 
+  /** Tmps of swaps beside `current` and of deltas appended inside it. */
+  private def leftovers(typeDir: JPath): Seq[String] =
+    swapSiblings(typeDir, "current") ++ (if (!Files.exists(typeDir.resolve("current"))) Nil
+      else Files.list(typeDir.resolve("current")).iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("._delta-") && n.contains(".tmp-")).toSeq)
+
   test("entity commit: a crash at any mutating call is replayed; no state lost, no checkpoint moved back") {
     val cleanRoot = Files.createTempDirectory("fault-clean").toString
     sent.clear(); arm()
     runJob(s"faulty://$cleanRoot", mutable.Buffer.empty)
     val n = mutatingCalls
+    // page 1 and page 3 swap in a base, page 2 appends a delta in between
+    assert(renamed.asScala.toSeq.filter(n => n == "current" || n.startsWith("_delta-")) == Seq("current", "_delta-1", "current"))
     val expectedDocs = sentDocs()
     val expected = finalState(cleanRoot)
-    assert(expected._2 == 40 && expected._1.map(_._1) == Seq("1", "2", "3", "4", "5"))
+    assert(expected._2 == 40 && expected._1.map(_._1) == (Seq(1, 2, 3, 4, 5, 6) ++ (100 until 297)).map(_.toString).sorted)
 
     for (k <- 1 to n) {
       val root = Files.createTempDirectory(s"fault-$k").toString
@@ -135,7 +155,7 @@ class CommitFaultSpec extends SparkSpec {
       assert(checkpoints == checkpoints.sorted, s"k=$k: the checkpoint moved backwards: $checkpoints")
       assert(expectedDocs.subsetOf(sentDocs()), s"k=$k: never sent: ${expectedDocs -- sentDocs()}")
       assert((state, ckpt) == expected, s"k=$k")
-      assert(swapSiblings(Paths.get(root, entityType.name), "current").isEmpty, s"k=$k")
+      assert(leftovers(Paths.get(root, entityType.name)).isEmpty, s"k=$k")
     }
   }
 

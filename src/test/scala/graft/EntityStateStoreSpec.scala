@@ -1,15 +1,18 @@
 package graft
 
 import graft.model.Model
-import graft.state.EntityStateStore
+import graft.state.{EntityStateStore, StateStores}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 /** State-store semantics, 1:1 with the reference's cache tests
   * (test/cache.test.js): empty bootstrap (:17-23), save/load roundtrip
   * (:36-48), upsert + checkpoint=max (:50-61), TTL eviction (:63-74),
   * partial-results stall bump (:76-82), TTL refresh on every touched id
-  * (:98-106).
+  * (:98-106); and the generation store against the full rewrite it
+  * replaced.
   */
 class EntityStateStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -29,13 +32,11 @@ class EntityStateStoreSpec extends SparkSpec {
 
   test("commit/load roundtrip with upsert and checkpoint (cache.test.js:36-61)") {
     val store = freshStore()
-    store.commit("t", batch("1" -> "h1", "2" -> "h2"), nowMs = 1000, ttlMs = 500, newCheckpoint = 42,
-      state = store.load("t")._1)
+    store.commit("t", batch("1" -> "h1", "2" -> "h2"), nowMs = 1000, ttlMs = 500, newCheckpoint = 42, pageRows = 2)
     val (df1, ckpt1) = store.load("t")
     assert(ckpt1 == 42 && df1.count() == 2)
     // upsert overwrites by id, keeps survivors
-    store.commit("t", batch("2" -> "h2b", "3" -> "h3"), nowMs = 1100, ttlMs = 500, newCheckpoint = 50,
-      state = store.load("t")._1)
+    store.commit("t", batch("2" -> "h2b", "3" -> "h3"), nowMs = 1100, ttlMs = 500, newCheckpoint = 50, pageRows = 2)
     val (df2, ckpt2) = store.load("t")
     assert(ckpt2 == 50)
     val m = df2.select("id", "entityHash").as[(String, String)].collect().toMap
@@ -44,14 +45,69 @@ class EntityStateStoreSpec extends SparkSpec {
 
   test("TTL eviction at commit time (cache.test.js:63-74) + refresh for touched ids") {
     val store = freshStore()
-    store.commit("t", batch("old" -> "h", "touched" -> "h"), nowMs = 1000, ttlMs = 100, newCheckpoint = 1,
-      state = store.load("t")._1)
+    store.commit("t", batch("old" -> "h", "touched" -> "h"), nowMs = 1000, ttlMs = 100, newCheckpoint = 1, pageRows = 2)
     // at now=1200 both ttls (1100) expired; "touched" re-appears in the batch
     // (TTL refresh side effect, cache.js:79), "old" is evicted
-    store.commit("t", batch("touched" -> "h"), nowMs = 1200, ttlMs = 100, newCheckpoint = 2,
-      state = store.load("t")._1)
+    store.commit("t", batch("touched" -> "h"), nowMs = 1200, ttlMs = 100, newCheckpoint = 2, pageRows = 1)
     val ids = store.load("t")._1.select("id").as[String].collect().toSeq
     assert(ids == Seq("touched"))
+  }
+
+  /** The commit before generations, kept as the reference: every commit
+    * rewrites the whole state — the survivors of `state` that are not in
+    * the page, plus the page.
+    */
+  private def rewriteCommit(state: DataFrame, batch: DataFrame, nowMs: Long, ttlMs: Long): DataFrame = {
+    val fresh = StateStores.dedupNewestPerId(batch)
+      .select(col("id"), lit(nowMs + ttlMs).as("ttl"), col("entityJson"), col("entityHash"))
+    val survivors = state
+      .where(col("ttl") >= lit(nowMs))
+      .join(fresh.select(col("id").as("__bid")), col("id") === col("__bid"), "left_anti")
+    survivors.unionByName(fresh).select(Model.stateSchema.fieldNames.map(col): _*)
+  }
+
+  private def stateRows(df: DataFrame): Seq[(String, Long, String, String)] =
+    df.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3))).toSeq.sorted
+
+  private def deltaCount(root: Path): Int = {
+    val current = root.resolve("t").resolve("current")
+    if (!Files.exists(current)) 0
+    else Files.list(current).iterator().asScala.count(_.getFileName.toString.startsWith("_delta-"))
+  }
+
+  test("generations: after every commit of random pages, load equals the full rewrite, rows and checkpoint") {
+    val ttlMs = 1000L
+    var sawDelta, sawDeltasCompacted, sawEvictionAtRead = false
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val root = Files.createTempDirectory(s"graft-gen-$seed")
+      val store = new EntityStateStore(spark, root.toString)
+      var reference = spark.createDataFrame(List.empty[Row].asJava, Model.stateSchema)
+      var now, ckpt = 0L
+      for (step <- 0 until 14) {
+        // a big page now and then (compacts), mostly pages of 1-3 rows over
+        // overlapping ids, with repeats inside a page; the clock moves by up
+        // to 40% of the TTL, so rows expire across generations
+        val size = if (step == 0 || rnd.nextInt(6) == 0) 300 + rnd.nextInt(200) else 1 + rnd.nextInt(3)
+        val page = Seq.fill(size)((s"e${rnd.nextInt(600)}", rnd.nextInt(50).toLong, s"h${rnd.nextInt(3)}"))
+          .toDF("id", Model.UpdatedOnMs, "entityHash").withColumn("entityJson", concat(lit("j-"), col("entityHash")))
+        now += rnd.nextInt(400); ckpt += rnd.nextInt(5)
+        val before = stateRows(reference).map(_._1).toSet
+        val deltasBefore = deltaCount(root)
+        store.commit("t", page, now, ttlMs, ckpt, pageRows = size)
+        val expected = rewriteCommit(reference, page, now, ttlMs).collect().toList
+        reference = spark.createDataFrame(expected.asJava, Model.stateSchema)
+        val (df, loaded) = store.load("t")
+        assert(loaded == ckpt, s"seed $seed step $step: checkpoint")
+        assert(stateRows(df) == stateRows(reference), s"seed $seed step $step")
+        val deltas = deltaCount(root)
+        sawDelta |= deltas > 0
+        sawDeltasCompacted |= deltasBefore > 0 && deltas == 0
+        sawEvictionAtRead |= deltas > 0 && (before -- expected.map(_.getString(0))).nonEmpty
+      }
+    }
+    assert(sawDelta && sawDeltasCompacted && sawEvictionAtRead,
+      s"delta $sawDelta, compaction of deltas $sawDeltasCompacted, eviction at read $sawEvictionAtRead")
   }
 
   test("nextCheckpoint: max over ALL fetched rows; invalid keeps prev; stall bumps (cache.js:100-117)") {
@@ -73,8 +129,7 @@ class EntityStateStoreSpec extends SparkSpec {
 
   test("commit survives repeated ids within one page (overlap re-fetch, W3)") {
     val store = freshStore()
-    store.commit("t", batch("1" -> "ha", "1" -> "ha"), nowMs = 1, ttlMs = 10, newCheckpoint = 1,
-      state = store.load("t")._1)
+    store.commit("t", batch("1" -> "ha", "1" -> "ha"), nowMs = 1, ttlMs = 10, newCheckpoint = 1, pageRows = 2)
     assert(store.load("t")._1.count() == 1)
   }
 
@@ -85,8 +140,7 @@ class EntityStateStoreSpec extends SparkSpec {
     val b = Seq(("1", 10L, "aaa-old"), ("1", 20L, "zzz-new"))
       .toDF("id", Model.UpdatedOnMs, "entityHash")
       .withColumn("entityJson", lit("{}"))
-    store.commit("t", b, nowMs = 1, ttlMs = 10, newCheckpoint = 1,
-      state = store.load("t")._1)
+    store.commit("t", b, nowMs = 1, ttlMs = 10, newCheckpoint = 1, pageRows = 2)
     val kept = store.load("t")._1.select("entityHash").as[String].collect().toSeq
     assert(kept == Seq("zzz-new"))
   }
@@ -94,7 +148,7 @@ class EntityStateStoreSpec extends SparkSpec {
   test("K5 commitMerge tombstone round-trip: delete + update + insert in one commit") {
     val store = freshStore()
     store.commit("t", batch("a" -> "h1", "b" -> "h2", "c" -> "h3"),
-      nowMs = 1000, ttlMs = 1000, newCheckpoint = 1, state = store.load("t")._1)
+      nowMs = 1000, ttlMs = 1000, newCheckpoint = 1, pageRows = 3)
     // one merge page: tombstone a, update b, insert d (c untouched)
     val actions = Seq(("a", "{}", "x", "delete"), ("b", "{}", "h2b", "upsert"),
         ("d", "{}", "h4", "upsert"))

@@ -10,8 +10,13 @@ import java.net.InetSocketAddress
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeAndComment
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline behavior with a stubbed API + collecting sink:
@@ -34,7 +39,8 @@ class PipelineSpec extends SparkSpec {
 
   private val tpl = """{"id": "{{entity.id}}", "x": "{{entity.x}}"}"""
 
-  private def mkJob(store: EntityStateStore, pages: Map[Long, EntityApiSource.Page]): EntityEtlJob = {
+  private def mkJob(store: EntityStateStore, pages: Map[Long, EntityApiSource.Page],
+                    now: () => Long = () => 5000): EntityEtlJob = {
     // fetcher keyed on the rendered updatedFromMs — exercises URL templating (E10)
     val fetch: EntityApiSource.Fetcher = url => {
       val ckpt = url.split("updatedFromMs=")(1).toLong
@@ -46,7 +52,7 @@ class PipelineSpec extends SparkSpec {
       entitiesUrlTemplate = "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}",
       senderFactory = collectingSender,
       templates = Map("t" -> tpl),
-      maxBatchSize = 2, ttlMs = 1000000, now = () => 5000)
+      maxBatchSize = 2, ttlMs = 1000000, now = now)
   }
 
   private def entity(id: Int, x: String, ts: Long): String =
@@ -216,6 +222,97 @@ class PipelineSpec extends SparkSpec {
     // the send (which parses the page in its tasks) and the commit's write
     assert(seen == Seq("foreachPartition", "command"), s"page actions: $seen")
     assert(store.load("t")._2 == 20 && store.load("t")._1.count() == 2)
+  }
+
+  /** A first page of `base` entities (ids 1 to `base`, updatedOnMs 10) and
+    * then `n` pages, page i fetched from checkpoint 10 * i and made by
+    * `items(i, updatedOnMs)`; the last one ends the run.
+    */
+  private def pageRun(base: Int, n: Int)(items: (Int, Long) => Seq[String]): Map[Long, EntityApiSource.Page] =
+    Map(1L -> EntityApiSource.Page((1 to base).map(entity(_, "a", 10)), partialResults = true)) ++
+      (1 to n).map(i => 10L * i -> EntityApiSource.Page(items(i, 10L * (i + 1)), partialResults = i < n))
+
+  private def deltaDirs(root: java.nio.file.Path): Int =
+    Files.list(root.resolve("t").resolve("current")).iterator().asScala
+      .count(_.getFileName.toString.startsWith("_delta-"))
+
+  /** The sources in Spark's codegen cache (CodeGenerator's private `cache`,
+    * read by reflection). Spark's compilation count
+    * (CodegenMetrics.METRIC_COMPILATION_TIME) also counts a class compiled
+    * again after that 100-entry cache evicted it, so a rising count alone
+    * does not mean new code; a source never cached before does.
+    */
+  private def cachedSources(): Set[String] = {
+    val generator = Class.forName("org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$")
+    val field = generator.getDeclaredField("cache")
+    field.setAccessible(true)
+    val cache = field.get(generator.getField("MODULE$").get(null))
+    val loading = cache.getClass.getMethod("loadingCache").invoke(cache)
+    val asMap = loading.getClass.getMethod("asMap")
+    asMap.setAccessible(true)
+    asMap.invoke(loading).asInstanceOf[java.util.Map[AnyRef, AnyRef]].keySet().asScala.collect {
+      case (c: CodeAndComment, _) => c.body
+      case (_, c: CodeAndComment) => c.body
+    }.toSet
+  }
+
+  test("a moving clock compiles no new code: generated sources stop changing after a compaction cycle") {
+    sentBodies.clear(); failSends = false
+    val root = Files.createTempDirectory("pl-codegen")
+    // 400 state rows and 20 pages of two changed entities: five deltas and
+    // one compaction per cycle. Page 6 compacts the first page's base and
+    // page 12 the base page 6 wrote, whose file layout differs; from then
+    // on every plan has been seen.
+    val pages = pageRun(400, 20)((i, ts) => Seq(entity(i, s"v$i", ts), entity(i + 100, s"v$i", ts)))
+    val seen = mutable.Set.empty[String] ++ cachedSources()
+    val fresh = mutable.Buffer.empty[Int]
+    val compiled = mutable.Buffer.empty[Long]
+    var clock = 5000L
+    // the job reads the clock once per page, between its send and its commit
+    val now = () => {
+      val sources = cachedSources()
+      fresh += (sources -- seen).size
+      seen ++= sources
+      compiled += CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      clock += 1000
+      clock
+    }
+    val stats = mkJob(new EntityStateStore(spark, root.toString), pages, now).runType(EntityType("t", "id"))
+    assert(stats.map(_.emitted) == 400 +: Seq.fill(20)(2L))
+    assert(fresh.drop(14).forall(_ == 0),
+      s"new generated sources at each page: $fresh; compilations counted: $compiled")
+    assert(deltaDirs(root) == 2)
+  }
+
+  test("a delta page writes its deduplicated ids, not the state, while the state grows") {
+    sentBodies.clear(); failSends = false
+    val root = Files.createTempDirectory("pl-delta")
+    val store = new EntityStateStore(spark, root.toString)
+    // each page: two new ids, one of them twice
+    val pages = pageRun(400, 5)((i, ts) =>
+      Seq(entity(1000 + 2 * i, "n", ts), entity(1001 + 2 * i, "n", ts), entity(1000 + 2 * i, "m", ts)))
+    val written = new ConcurrentLinkedQueue[Long]()
+    def rowsWritten(plan: SparkPlan): Seq[Long] = plan match {
+      case w: DataWritingCommandExec => Seq(w.cmd.metrics("numOutputRows").value)
+      case a: AdaptiveSparkPlanExec => rowsWritten(a.executedPlan)
+      case q: QueryStageExec => rowsWritten(q.plan)
+      case p => p.children.flatMap(rowsWritten)
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        rowsWritten(qe.executedPlan).foreach(written.add(_))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      mkJob(store, pages).runType(EntityType("t", "id"))
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // CompactionShare of 400 rows is 10: four 2-row deltas as the state
+    // grows from 400 to 408 rows, then page 5 compacts all 410
+    assert(written.asScala.toSeq == Seq(400L, 2L, 2L, 2L, 2L, 410L))
+    assert(store.load("t")._1.count() == 410 && deltaDirs(root) == 0)
   }
 
   test("EtlConfig.buildJob renders {{env.X}} in entity templates from its env") {
