@@ -89,17 +89,6 @@ object Dedup {
       .select(col(idCol) +: extraCols.map(col) :+
         explode(shinglesOfWords(col("__words"), n)).as("__sh"): _*)
 
-  /** MinHash signature column: for each of `numPerm` hash permutations, the
-    * min over the document's shingles of a seeded 64-bit hash. Computed as
-    * `numPerm` parallel `min` aggregates over the exploded shingles — one
-    * shuffle keyed by doc id with full map-side partial aggregation, so at
-    * 100 TB the reduce side only sees one signature row per (doc, partition).
-    *
-    * Returns (idCol, sig: array<long>[numPerm]).
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, shingles: Column, numPerm: Int): DataFrame =
-    minhashSignaturesExploded(df.select(col(idCol), explode(shingles).as("__sh")), idCol, numPerm)
-
   /** Modulus for the portable universal-hash permutation family: the
     * Mersenne prime 2^31-1. 31-bit minhash values are the standard working
     * size (collision odds per permutation ~ #shingles/2^31 — immaterial for
@@ -115,7 +104,9 @@ object Dedup {
   def minhashPerm(i: Int): (Long, Long) =
     (((i + 1) * 2654435761L) % MinhashP, ((i + 1) * 40503L + 7) % MinhashP)
 
-  /** Same, over pre-exploded (id, __sh) rows.
+  /** MinHash signatures over pre-exploded (id, __sh) rows: for each of
+    * `numPerm` hash permutations, the min over the document's shingles.
+    * Returns (idCol, sig: array<long>[numPerm]).
     *
     * The shingle is hashed ONCE with the portable md5-based base hash; each
     * permutation is an affine transform (a_i*x+b_i) mod p of that base —

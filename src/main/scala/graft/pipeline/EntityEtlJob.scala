@@ -32,7 +32,6 @@ final class EntityEtlJob(
     templates: Map[String, String],
     maxBatchSize: Int = 10000,
     ttlMs: Long = 8L * 3600 * 1000,
-    escapeHtml: Boolean = false,
     now: () => Long = () => System.currentTimeMillis(),
     // {{env.X}} in ENTITY templates resolves against this map at template
     // compile time (E9; reference templates resolve against process env) —
@@ -65,17 +64,14 @@ final class EntityEtlJob(
       .filter(t => templates.contains(t.name))
       .map(t => t.name -> runType(t)).toMap
 
-  /** The do-while pagination loop for one type (reference app.js:48-59). */
+  /** The pagination loop for one type: [[EntityApiSource.walk]] stepped by [[processPage]]. */
   def runType(entityType: EntityType): Seq[PageStats] = {
     val stats = Seq.newBuilder[PageStats]
-    var checkpoint = store.load(entityType.name)._2
-    var partial = true
-    while (partial) {
-      val page = EntityApiSource.fetchPage(fetch, entitiesUrlTemplate, entityType, checkpoint)
-      val st = processPage(entityType, page, checkpoint)
-      stats += st
-      partial = page.partialResults
-      checkpoint = st.checkpoint
+    EntityApiSource.walk(fetch, entitiesUrlTemplate, entityType, store.load(entityType.name)._2) {
+      (page, checkpoint) =>
+        val st = processPage(entityType, page, checkpoint)
+        stats += st
+        st.checkpoint
     }
     stats.result()
   }
@@ -105,7 +101,7 @@ final class EntityEtlJob(
 
       // T1: compile this type's template once into a single Column
       val doc: Column = TemplateCompiler.compileTemplate(
-        templates(entityType.name), TemplateCompiler.mapResolver(col("attrs"), env), escapeHtml)
+        templates(entityType.name), TemplateCompiler.mapResolver(col("attrs"), env))
       val sendObs = new Observation(s"graft-send-${System.nanoTime()}")
       val batches = HttpBatchSink.send(
         ChangeFilter.newOrUpdated(newest, state)

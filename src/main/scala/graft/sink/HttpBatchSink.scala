@@ -46,8 +46,8 @@ object HttpBatchSink {
   def httpSender(url: String, method: String, headers: Map[String, String],
                  timeout: Duration = Duration.ofSeconds(60),
                  env: () => Map[String, String] = { val snap = sys.env; () => snap }): SenderFactory = {
-    val transport = httpTransport(url, method, headers, timeout, env)
-    () => { val send = transport(); body => send(Nil, body) }
+    val transport = httpTransport(method, headers, timeout, env)
+    () => { val send = transport(); body => send(url, Nil, Some(body)) }
   }
 
   /** Keyed transport for effectively-once delivery:
@@ -64,25 +64,27 @@ object HttpBatchSink {
                       timeout: Duration = Duration.ofSeconds(60),
                       env: () => Map[String, String] = { val snap = sys.env; () => snap })
     : KeyedSenderFactory = {
-    val transport = httpTransport(url, method, headers, timeout, env)
-    () => { val send = transport(); (key, body) => send(Seq(keyHeader -> key), body) }
+    val transport = httpTransport(method, headers, timeout, env)
+    () => { val send = transport(); (key, body) => send(url, Seq(keyHeader -> key), Some(body)) }
   }
 
-  /** The one request builder behind both transports: (extra headers, body)
-    * => Unit, one client per partition. Header templates render per
-    * request; a non-2xx response throws.
+  /** The one request builder behind both transports and
+    * [[graft.source.EntityApiSource.httpFetcher]]: (url, extra headers,
+    * body) => response body, one client per call of the factory (per
+    * partition for the senders). Header templates render per request; no
+    * body sends none; a non-2xx response throws.
     */
-  private def httpTransport(url: String, method: String, headers: Map[String, String],
-                            timeout: Duration, env: () => Map[String, String])
-    : () => (Seq[(String, String)], String) => Unit = {
+  private[graft] def httpTransport(method: String, headers: Map[String, String],
+                                   timeout: Duration, env: () => Map[String, String])
+    : () => (String, Seq[(String, String)], Option[String]) => String = {
     // construction-time fail-fast: malformed header templates and env vars
     // missing at startup are config errors, not per-request 401s
     graft.template.TemplateCompiler.validateHeaderTemplates(headers, env())
     () => {
       val client = HttpClient.newBuilder().connectTimeout(timeout).build()
-      (extra, body) => {
+      (url, extra, body) => {
         val b = HttpRequest.newBuilder(URI.create(url)).timeout(timeout)
-          .method(method, HttpRequest.BodyPublishers.ofString(body))
+          .method(method, body.fold(HttpRequest.BodyPublishers.noBody())(HttpRequest.BodyPublishers.ofString))
         val e = env()
         headers.foreach { case (k, v) =>
           b.header(k, graft.template.TemplateCompiler.renderWithEnv(v, Map.empty, e))
@@ -90,6 +92,7 @@ object HttpBatchSink {
         extra.foreach { case (k, v) => b.header(k, v) }
         val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
         require(resp.statusCode / 100 == 2, s"$method $url -> HTTP ${resp.statusCode}")
+        resp.body()
       }
     }
   }

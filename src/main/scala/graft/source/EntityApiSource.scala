@@ -3,10 +3,9 @@ package graft.source
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.model.{EntityType, Model}
+import graft.sink.HttpBatchSink
 import graft.template.TemplateCompiler
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 import scala.jdk.CollectionConverters._
 
@@ -48,21 +47,9 @@ object EntityApiSource {
     */
   def httpFetcher(headers: Map[String, String], timeout: Duration = Duration.ofSeconds(60),
                   env: () => Map[String, String] = () => sys.env): Fetcher = {
-    // construction-time fail-fast on malformed header templates / env vars
-    // missing at startup (rotation still applies per request below)
-    TemplateCompiler.validateHeaderTemplates(headers, env())
-    lazy val client = HttpClient.newBuilder().connectTimeout(timeout).build()
-    url => {
-      val b = HttpRequest.newBuilder(URI.create(url)).timeout(timeout).GET()
-      val e = env()
-      headers.foreach { case (k, v) =>
-        b.header(k, graft.template.TemplateCompiler.renderWithEnv(v, Map.empty, e))
-      }
-      val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
-      // fail-fast on non-2xx, unwinds the whole run (reference http.js:19, app.js:28-30)
-      require(resp.statusCode / 100 == 2, s"GET $url -> HTTP ${resp.statusCode}")
-      resp.body()
-    }
+    val transport = HttpBatchSink.httpTransport("GET", headers, timeout, env)
+    lazy val send = transport()
+    url => send(url, Nil, None)
   }
 
   /** GET the type catalog `{name, uniqueIdField}[]` (reference app.js:71-74).
@@ -94,6 +81,28 @@ object EntityApiSource {
     Page(items, partial)
   }
 
+  /** The do-while pagination loop (reference app.js:48-59) of both the ETL
+    * loop and the `graft-entities` reader: `step` turns a page and the
+    * checkpoint it was fetched at into the next checkpoint, while
+    * `partialResults` and under `maxPages` pages. Returns the last checkpoint.
+    */
+  def walk(fetch: Fetcher, urlTemplate: String, entityType: EntityType, from: Long,
+           maxPages: Int = Int.MaxValue)(step: (Page, Long) => Long): Long = {
+    var checkpoint = from
+    var partial = true
+    var pages = 0
+    while (partial && pages < maxPages) {
+      val page = fetchPage(fetch, urlTemplate, entityType, checkpoint)
+      checkpoint = step(page, checkpoint)
+      partial = page.partialResults
+      pages += 1
+    }
+    checkpoint
+  }
+
+  /** A parsed item: (id, updatedOnMs, attrs). */
+  type Entity = (Option[String], Option[Long], Map[String, String])
+
   /** One item as (id, updatedOnMs, attrs):
     *  - `attrs` holds every key but `updatedOnMs`, each value rendered by
     *    [[Json.render]] (a JSON null drops its key);
@@ -105,7 +114,7 @@ object EntityApiSource {
     * An item that is not a JSON object gets no id, so the missing-id filter
     * drops it and the page counts it as dropped (F3).
     */
-  def parseEntity(item: String, idField: String): (Option[String], Option[Long], Map[String, String]) =
+  def parseEntity(item: String, idField: String): Entity =
     scala.util.Try(Json.read(item, "entity item")).toOption.filter(_.isObject) match {
       case None => (None, None, Map.empty)
       case Some(obj) =>

@@ -22,15 +22,20 @@ import scala.jdk.CollectionConverters._
   *
   * The streaming offset IS the reference's per-type checkpoint (epoch-millis
   * `updatedFromMs`, reference cache.js:18/app.js:77): Spark's streaming
-  * checkpoint persists it, `latestOffset` advances it by draining the
-  * paginated fetch loop (app.js:48-59) including the stall-breaker bump
+  * checkpoint persists it, `latestOffset` advances it by walking the
+  * paginated fetch loop ([[EntityApiSource.walk]], the ETL loop's walk,
+  * reference app.js:48-59) including the stall-breaker bump
   * (cache.js:114-117), and the predicate travels inside the URL — the
   * reference's hand-built pushdown, kept (SURVEY.md §4).
   *
-  * Rows are built by [[EntityApiSource.parseEntity]], the parser the ETL
-  * loop uses: each value renders from the value alone (the rule in
-  * [[graft.source.Json]]), so an entity yields the same attrs, hence the
-  * same content hash, through either path and on any page.
+  * The driver needs every item's `updatedOnMs` to name an offset, so it
+  * fetches and parses each item once, with [[EntityApiSource.parseEntity]]
+  * (the ETL loop's parser: an entity yields the same attrs, hence the same
+  * content hash, through either path and on any page). Each page's rows
+  * are one input partition; the reader only emits them. A batch's parsed
+  * rows stay on the driver until planned: at most `maxPagesPerBatch` pages.
+  * An AvailableNow run's first walk goes to the backlog's end, holding one
+  * page at a time past the cap, and serves its first pages as batch one.
   *
   * Options:
   *   - `urlTemplate`     e.g. http://host/v2/entities?type={{type}}&updatedFromMs={{updatedFromMs}}
@@ -41,9 +46,9 @@ import scala.jdk.CollectionConverters._
   *                       default is the java.net.http transport)
   *   - `header.<name>`   HTTP headers for the default transport
   *   - `maxPagesPerBatch` admission control: at most this many pages are
-  *                       drained per micro-batch (default unbounded). The
+  *                       walked per micro-batch (default unbounded). The
   *                       first run against a deep backlog (checkpoint=1 =>
-  *                       full history) would otherwise drain EVERYTHING into
+  *                       full history) would otherwise hold EVERYTHING in
   *                       driver memory as one batch; with the cap the
   *                       backlog walks forward across micro-batches, each
   *                       committing its own checkpoint.
@@ -101,59 +106,55 @@ class EntityTable(config: EntitySourceConfig) extends Table with SupportsRead {
     }
 }
 
-/** Drains the pagination loop from `from` until !partialResults; returns
-  * (raw item json strings, final checkpoint). Driver-side, like the
-  * reference (pages are causally sequential — each page's window starts at
-  * the previous page's max event time).
+/** The reader's walk: [[EntityApiSource.walk]] stepped by a driver-side
+  * parse and [[EntityStateStore.nextCheckpoint]] over the parsed
+  * `updatedOnMs`, the rule `EntityEtlJob.processPage` applies to the same
+  * parse (pages are causally sequential, as in the reference).
   */
 object PageDrain {
-  def drain(config: EntitySourceConfig, from: Long,
-            maxPages: Int = Int.MaxValue): (Seq[String], Long) =
-    walk(config, from, maxPages, retain = true)
 
-  /** Walk the pagination loop to the current backlog end WITHOUT retaining
-    * items — O(one page) memory. Used by the AvailableNow prepare step to
-    * fix the run's end offset; the per-batch drains then re-fetch pages
-    * under their own cap.
+  /** The parsed rows of the first `keep` pages walked, one Seq per page, and
+    * the checkpoints after the last kept page and after the last page.
     */
-  def probeEnd(config: EntitySourceConfig, from: Long): Long =
-    walk(config, from, Int.MaxValue, retain = false)._2
+  final case class Drained(pages: Seq[Seq[EntityApiSource.Entity]], keptEnd: Long, end: Long)
 
-  private def walk(config: EntitySourceConfig, from: Long, maxPages: Int,
-                   retain: Boolean): (Seq[String], Long) = {
-    val fetch = config.fetch
-    val items = Seq.newBuilder[String]
-    var checkpoint = from
-    var partial = true
-    var pages = 0
-    while (partial && pages < maxPages) {
-      pages += 1
-      val page = EntityApiSource.fetchPage(fetch, config.urlTemplate, config.entityType, checkpoint)
-      if (retain) items ++= page.items
-      val maxTs = page.items.flatMap(updatedOnMs(config, _))
-      checkpoint = EntityStateStore.nextCheckpoint(maxTs.maxOption, checkpoint, page.partialResults)
-      partial = page.partialResults
+  /** Walk at most `maxPages` pages from `from`, keeping the first `keep`. */
+  def drain(config: EntitySourceConfig, from: Long, maxPages: Int,
+            keep: Int = Int.MaxValue): Drained = {
+    val pages = Seq.newBuilder[Seq[EntityApiSource.Entity]]
+    var kept = 0
+    var keptEnd = from
+    val end = EntityApiSource.walk(config.fetch, config.urlTemplate, config.entityType, from, maxPages) {
+      (page, checkpoint) =>
+        val rows = page.items.map(EntityApiSource.parseEntity(_, config.entityType.uniqueIdField))
+        val next = EntityStateStore.nextCheckpoint(rows.flatMap(_._2).maxOption, checkpoint, page.partialResults)
+        if (kept < keep) { pages += rows; kept += 1; keptEnd = next }
+        next
     }
-    (items.result(), checkpoint)
+    Drained(pages.result(), keptEnd, end)
   }
 
-  private def updatedOnMs(config: EntitySourceConfig, item: String): Option[Long] =
-    EntityApiSource.parseEntity(item, config.entityType.uniqueIdField)._2
+  /** Rows no newer than `end`; a row without a valid updatedOnMs stays. */
+  def upTo(pages: Seq[Seq[EntityApiSource.Entity]], end: Long): Seq[Seq[EntityApiSource.Entity]] =
+    pages.map(_.filter(_._2.forall(_ <= end)))
 
-  /** Items no newer than `end`; an item without a valid updatedOnMs stays. */
-  def upTo(config: EntitySourceConfig, items: Seq[String], end: Long): Seq[String] =
-    items.filter(updatedOnMs(config, _).forall(_ <= end))
+  /** One input partition per non-empty page. */
+  def partitions(pages: Seq[Seq[EntityApiSource.Entity]]): Array[InputPartition] =
+    pages.filter(_.nonEmpty).map(rows => EntityInputPartition(rows.toArray): InputPartition).toArray
 }
 
 class EntityScan(config: EntitySourceConfig) extends Scan {
   override def readSchema(): StructType = Model.entityBatchSchema
   override def description(): String = s"graft-entities scan (${config.entityType.name})"
 
+  // Spark asks each copy of the physical scan node for its partitions (the
+  // planner's node, then the copy `prepareForExecution` makes), and the
+  // copies share this Scan: walk the API once per Scan.
+  private lazy val partitions =
+    PageDrain.partitions(PageDrain.drain(config, config.startCheckpoint, Int.MaxValue).pages)
+
   override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val (items, _) = PageDrain.drain(config, config.startCheckpoint)
-      EntityScan.partition(items, config.entityType.uniqueIdField)
-    }
+    override def planInputPartitions(): Array[InputPartition] = partitions
     override def createReaderFactory(): PartitionReaderFactory = EntityReaderFactory
   }
 
@@ -161,17 +162,8 @@ class EntityScan(config: EntitySourceConfig) extends Scan {
     new EntityMicroBatchStream(config)
 }
 
-object EntityScan {
-  /** Split drained items into input partitions (rows were fetched on the
-    * driver; executors parse them — parallelism in parse + downstream).
-    */
-  def partition(items: Seq[String], idField: String, slices: Int = 8): Array[InputPartition] =
-    if (items.isEmpty) Array.empty
-    else items.grouped(math.max(1, math.ceil(items.size.toDouble / slices).toInt))
-      .map(chunk => EntityInputPartition(chunk.toArray, idField): InputPartition).toArray
-}
-
-final case class EntityInputPartition(items: Array[String], idField: String) extends InputPartition
+/** One fetched page's rows, parsed on the driver. */
+final case class EntityInputPartition(rows: Array[EntityApiSource.Entity]) extends InputPartition
 
 /** Streaming offset = the entity checkpoint (epoch millis). */
 final case class CheckpointOffset(ms: Long) extends Offset {
@@ -181,9 +173,10 @@ final case class CheckpointOffset(ms: Long) extends Offset {
 class EntityMicroBatchStream(config: EntitySourceConfig)
     extends MicroBatchStream with SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  // items drained for the current (start, end] window, keyed by end offset
-  @volatile private var pending: (Long, Seq[String]) = (config.startCheckpoint, Seq.empty)
-  // AvailableNow: the backlog end fixed at prepare time; batches never pass it
+  // partitions of the rows walked for the current (start, end] window,
+  // keyed by end offset
+  @volatile private var pending: (Long, Array[InputPartition]) = (config.startCheckpoint, Array.empty)
+  // AvailableNow: the backlog end fixed by the run's first walk; batches never pass it
   @volatile private var availableNowEnd: Option[Long] = None
   @volatile private var availableNowActive: Boolean = false
 
@@ -199,17 +192,16 @@ class EntityMicroBatchStream(config: EntitySourceConfig)
   /** Trigger.AvailableNow contract: fix the CURRENT backlog end as this
     * run's target, then let the capped micro-batches walk to it — without
     * this, Spark's generic wrapper captures ONE capped drain as the whole
-    * run and a deep backlog stops after maxPagesPerBatch pages. The probe
-    * walks pages without retaining items (O(page) memory); rows arriving
-    * after the probe are excluded by the same bound the replay path uses
-    * and picked up by the next run, exactly like the reference's cron
-    * (crontab:1) picks up from the committed checkpoint.
+    * run and a deep backlog stops after maxPagesPerBatch pages. Rows
+    * arriving after that walk are excluded by the same bound the replay
+    * path uses and picked up by the next run, exactly like the reference's
+    * cron (crontab:1) picks up from the committed checkpoint.
     *
-    * The probe is DEFERRED to the first `latestOffset` call: prepare runs
-    * before Spark hands the source its restored offset, so probing here
+    * The walk is DEFERRED to the first `latestOffset` call: prepare runs
+    * before Spark hands the source its restored offset, so walking here
     * would have to start from `config.startCheckpoint` and re-walk the
     * full API history on every cron run of a long-lived pipeline; the
-    * first `latestOffset` receives the committed checkpoint and probes
+    * first `latestOffset` receives the committed checkpoint and walks
     * only the actual backlog.
     */
   override def prepareForTriggerAvailableNow(): Unit = {
@@ -217,23 +209,26 @@ class EntityMicroBatchStream(config: EntitySourceConfig)
     availableNowEnd = None
   }
 
-  /** Drain at most `maxPagesPerBatch` pages past `start`; a deep backlog
+  /** Walk at most `maxPagesPerBatch` pages past `start`; a deep backlog
     * surfaces as successive micro-batches, each advancing the persisted
     * checkpoint, instead of one unbounded driver-memory batch (W4).
+    * An AvailableNow run's first call walks to the backlog's end and keeps
+    * its first `maxPagesPerBatch` pages as this batch (with the default cap
+    * every page is fetched once); later batches fetch the pages past the
+    * cap again, which is what bounds driver memory.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[CheckpointOffset].ms
-    if (availableNowActive && availableNowEnd.isEmpty)
-      availableNowEnd = Some(PageDrain.probeEnd(config, from))
-    val (drained, drainedNext) = PageDrain.drain(config, from, config.maxPagesPerBatch)
-    // under AvailableNow, cap at the prepared end: items newer than the
+    val cap = config.maxPagesPerBatch
+    val first = availableNowActive && availableNowEnd.isEmpty
+    val drained = PageDrain.drain(config, from, if (first) Int.MaxValue else cap, keep = cap)
+    if (first) availableNowEnd = Some(drained.end)
+    // under AvailableNow, cap at the run's end: items newer than the
     // target belong to the next run, and the offset must converge to the
     // target so the query terminates even while new data keeps arriving
-    val (items, next) = availableNowEnd match {
-      case Some(end) => (PageDrain.upTo(config, drained, end), math.min(drainedNext, end))
-      case None => (drained, drainedNext)
-    }
-    if (next != from) pending = (next, items)
+    val end = availableNowEnd.getOrElse(Long.MaxValue)
+    val next = math.min(drained.keptEnd, end)
+    if (next != from) pending = (next, PageDrain.partitions(PageDrain.upTo(drained.pages, end)))
     CheckpointOffset(math.max(next, from))
   }
 
@@ -243,20 +238,17 @@ class EntityMicroBatchStream(config: EntitySourceConfig)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val endMs = end.asInstanceOf[CheckpointOffset].ms
-    val items =
-      if (pending._1 == endMs) pending._2
-      else {
-        // recovery replay: re-drain from `start` with the SAME page cap (a
-        // deterministic fetcher then replays the exact page sequence), and
-        // BOUND the batch at the committed end offset — rows newer than
-        // endMs belong to the next batch (they re-arrive because the next
-        // start is endMs); without the bound a replayed batch would differ
-        // from its original contents
-        val drained =
-          PageDrain.drain(config, start.asInstanceOf[CheckpointOffset].ms, config.maxPagesPerBatch)._1
-        PageDrain.upTo(config, drained, endMs)
-      }
-    EntityScan.partition(items, config.entityType.uniqueIdField)
+    if (pending._1 == endMs) pending._2
+    else {
+      // recovery replay: re-walk from `start` with the SAME page cap (a
+      // deterministic fetcher then replays the exact page sequence), and
+      // BOUND the batch at the committed end offset — rows newer than
+      // endMs belong to the next batch (they re-arrive because the next
+      // start is endMs); without the bound a replayed batch would differ
+      // from its original contents
+      val drained = PageDrain.drain(config, start.asInstanceOf[CheckpointOffset].ms, config.maxPagesPerBatch)
+      PageDrain.partitions(PageDrain.upTo(drained.pages, endMs))
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = EntityReaderFactory
@@ -265,14 +257,15 @@ class EntityMicroBatchStream(config: EntitySourceConfig)
   override def stop(): Unit = ()
 }
 
+/** Emits a partition's rows, which the driver parsed while walking. */
 object EntityReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[EntityInputPartition]
+    val rows = partition.asInstanceOf[EntityInputPartition].rows
     new PartitionReader[InternalRow] {
       private var i = -1
-      override def next(): Boolean = { i += 1; i < p.items.length }
+      override def next(): Boolean = { i += 1; i < rows.length }
       override def get(): InternalRow = {
-        val (id, updated, attrs) = EntityApiSource.parseEntity(p.items(i), p.idField)
+        val (id, updated, attrs) = rows(i)
         val keys = attrs.keys.toArray.map(k => UTF8String.fromString(k): AnyRef)
         val vals = attrs.values.toArray.map(v => UTF8String.fromString(v): AnyRef)
         InternalRow(id.map(UTF8String.fromString).orNull,

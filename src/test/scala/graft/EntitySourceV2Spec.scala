@@ -58,16 +58,20 @@ object MutableBacklogFetcherFactory {
   @volatile var pages: Map[Long, String] = Map.empty
 }
 
-/** Records every requested checkpoint; serves the deep-backlog pages. */
+/** Records every requested checkpoint; serves `pages` (by default the
+  * deep-backlog pages).
+  */
 class CountingFetcherFactory extends FetcherFactory {
   override def fetcher(options: Map[String, String]): EntityApiSource.Fetcher = url => {
     val ckpt = url.split("updatedFromMs=")(1).toLong
     CountingFetcherFactory.requested.add(ckpt)
-    DeepBacklogFetcherFactory.pages.getOrElse(ckpt, """{"items": [], "partialResults": false}""")
+    CountingFetcherFactory.pages.getOrElse(ckpt, """{"items": [], "partialResults": false}""")
   }
 }
 object CountingFetcherFactory {
   val requested = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+  @volatile var pages: Map[Long, String] = DeepBacklogFetcherFactory.pages
+  def asked: Seq[Long] = scala.jdk.CollectionConverters.CollectionHasAsScala(requested).asScala.toSeq
 }
 
 /** Two-page stub whose first page carries `updatedOnMs` in exponent
@@ -77,15 +81,16 @@ object CountingFetcherFactory {
 class ExponentTsFetcherFactory extends FetcherFactory {
   override def fetcher(options: Map[String, String]): EntityApiSource.Fetcher = url => {
     val ckpt = url.split("updatedFromMs=")(1).toLong
-    ckpt match {
-      case 1L =>
-        """{"items": [{"uid": "e1", "v": "a", "updatedOnMs": 1.5e9},
-          |           {"uid": "e2", "v": "b", "updatedOnMs": 1.4e9}], "partialResults": true}""".stripMargin
-      case 1500000000L =>
-        """{"items": [{"uid": "e3", "v": "c", "updatedOnMs": 1500000100}], "partialResults": false}""".stripMargin
-      case _ => """{"items": [], "partialResults": false}"""
-    }
+    ExponentTsFetcherFactory.pages.getOrElse(ckpt, """{"items": [], "partialResults": false}""")
   }
+}
+object ExponentTsFetcherFactory {
+  val pages: Map[Long, String] = Map(
+    1L ->
+      """{"items": [{"uid": "e1", "v": "a", "updatedOnMs": 1.5e9},
+        |           {"uid": "e2", "v": "b", "updatedOnMs": 1.4e9}], "partialResults": true}""".stripMargin,
+    1500000000L ->
+      """{"items": [{"uid": "e3", "v": "c", "updatedOnMs": 1500000100}], "partialResults": false}""".stripMargin)
 }
 
 /** DataSource V2 connector: batch read drains the pagination loop with the
@@ -95,6 +100,26 @@ class ExponentTsFetcherFactory extends FetcherFactory {
   */
 class EntitySourceV2Spec extends SparkSpec {
   import spark.implicits._
+
+  /** Drives an AvailableNow run by hand, as Spark's engine would: batches
+    * until `latestOffset` stops advancing. Returns the final offset and the
+    * ids read.
+    */
+  private def driveAvailableNow(stream: EntityMicroBatchStream): (Long, Seq[String]) = {
+    stream.prepareForTriggerAvailableNow()
+    var start = stream.initialOffset().asInstanceOf[CheckpointOffset]
+    val seen = Seq.newBuilder[String]
+    var end = stream.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[CheckpointOffset]
+    while (end.ms != start.ms) {
+      stream.planInputPartitions(start, end).foreach { p =>
+        val r = EntityReaderFactory.createReader(p)
+        while (r.next()) seen += r.get().getUTF8String(0).toString
+      }
+      start = end
+      end = stream.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[CheckpointOffset]
+    }
+    (end.ms, seen.result())
+  }
 
   private def read() = spark.read.format("graft-entities")
     .option("urlTemplate", "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}")
@@ -198,6 +223,65 @@ class EntitySourceV2Spec extends SparkSpec {
     assert(ids.size == 10 && !ids.contains("late"))
   }
 
+  /** Fetches per checkpoint of a hand-driven AvailableNow run over the
+    * 5-page backlog at page cap `cap`.
+    */
+  private def availableNowFetches(cap: Int): Map[Long, Int] = {
+    CountingFetcherFactory.requested.clear()
+    val stream = new EntityMicroBatchStream(EntitySourceConfig(
+      "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}",
+      EntityType("widget", "uid"), 1L,
+      classOf[CountingFetcherFactory].getName, Map.empty, maxPagesPerBatch = cap))
+    val (end, ids) = driveAvailableNow(stream)
+    assert(end == 190L && ids.sorted == (100 to 190 by 10).map(t => s"u$t").sorted)
+    CountingFetcherFactory.asked.groupBy(identity).map { case (ckpt, n) => ckpt -> n.size }
+  }
+
+  test("AvailableNow at the default cap: the run's walk is its batch, each page fetched once") {
+    // 190 is the last latestOffset's empty page, which ends the run
+    assert(availableNowFetches(Int.MaxValue) ==
+      Map(1L -> 1, 110L -> 1, 130L -> 1, 150L -> 1, 170L -> 1, 190L -> 1))
+  }
+
+  test("AvailableNow at cap 2: the first batch's pages come from the run's walk, fetched once") {
+    // the pages past the cap are fetched again by their own batches, which
+    // keeps the driver's memory at the cap
+    assert(availableNowFetches(2) ==
+      Map(1L -> 1, 110L -> 1, 130L -> 2, 150L -> 2, 170L -> 2, 190L -> 1))
+  }
+
+  test("the batch read and runType walk the same checkpoints (boundary re-fetch, exponent timestamps)") {
+    val tpl = """{"id": "{{entity.id}}"}"""
+    def walkedBy(read: => Unit): Seq[Long] = {
+      CountingFetcherFactory.requested.clear()
+      read
+      CountingFetcherFactory.asked
+    }
+    try {
+      for ((pages, expected) <- Seq(StubFetcherFactory.pages -> Seq(1L, 200L),
+                                    ExponentTsFetcherFactory.pages -> Seq(1L, 1500000000L))) {
+        CountingFetcherFactory.pages = pages
+        val viaReader = walkedBy {
+          spark.read.format("graft-entities")
+            .option("urlTemplate", "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}")
+            .option("type", "widget").option("uniqueIdField", "uid")
+            .option("fetcherClass", classOf[CountingFetcherFactory].getName)
+            .load().collect()
+        }
+        val viaLoop = walkedBy {
+          val store = new graft.state.EntityStateStore(spark,
+            java.nio.file.Files.createTempDirectory("v2walk").toString)
+          new graft.pipeline.EntityEtlJob(spark, store, new CountingFetcherFactory().fetcher(Map.empty),
+            entitiesUrlTemplate = "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}",
+            senderFactory = () => _ => (), templates = Map("widget" -> tpl))
+            .runType(EntityType("widget", "uid"))
+        }
+        assert(viaReader == expected)
+        assert(viaLoop == viaReader)
+      }
+    } finally CountingFetcherFactory.pages = DeepBacklogFetcherFactory.pages
+  }
+
   test("AvailableNow probe starts from the restored offset, not startCheckpoint") {
     val config = EntitySourceConfig(
       "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}",
@@ -210,8 +294,7 @@ class EntitySourceV2Spec extends SparkSpec {
     // on the first latestOffset call with the restored checkpoint
     assert(CountingFetcherFactory.requested.isEmpty)
     stream.latestOffset(CheckpointOffset(150L), ReadLimit.allAvailable())
-    val asked = scala.jdk.CollectionConverters.CollectionHasAsScala(
-      CountingFetcherFactory.requested).asScala.toSeq
+    val asked = CountingFetcherFactory.asked
     assert(asked.nonEmpty)
     // a long-lived pipeline restored at 150 must never re-fetch history
     // from startCheckpoint=1
