@@ -78,26 +78,33 @@ final class EntityEtlJob(
 
   /** One page end-to-end: filter, transform, send, commit.
     *
-    * Every per-page fact is computed once. The parsed page is cached with
-    * its canonical content columns (`entityJson`, `entityHash`), which the
-    * CDC test and the state commit share. One last-write-wins pass
-    * ([[StateStores.dedupNewestPerId]]) feeds both the send and the commit,
-    * so the version posted for an id is the version cached for it. The A2
-    * counts and the checkpoint max are observed metrics of the send job
-    * (df.observe): the page observation sits ahead of the missing-id
-    * filter, because the checkpoint is a max over ALL fetched items
-    * (reference cache.js:100). The CDC join reads state through the page's
-    * ids ([[EntityStateStore.load]]), so it shuffles the page, not the
-    * state.
+    * Every per-page fact is computed once. The parsed page gets its
+    * canonical content columns (`entityJson`, `entityHash`), loses its
+    * id-less rows (F3) and keeps one version per id through one
+    * last-write-wins pass ([[StateStores.dedupNewestPerId]]). That frame is
+    * what the page caches: the state load's id broadcast, the CDC send and
+    * the commit all read it, so the page is shuffled once and the version
+    * posted for an id is the version committed for it. The cache keeps the
+    * window's hash partitioning and ordering on `id`, so the commit's own
+    * dedup and a compaction's anti-join add no exchange. Cache after that
+    * shuffle, not before it: a cache ahead of the window makes every reader
+    * shuffle the page again.
+    *
+    * The A2 counts and the checkpoint max are observed metrics
+    * (df.observe) inside the cached plan, ahead of the missing-id filter,
+    * because the checkpoint is a max over ALL fetched items (reference
+    * cache.js:100); the job that fills the cache reports them. The CDC join
+    * reads state through the page's ids ([[EntityStateStore.load]]), so it
+    * never shuffles the whole state.
     */
   def processPage(entityType: EntityType, page: Page, prevCheckpoint: Long): PageStats = {
-    val batch = ChangeFilter.withContentColumns(EntityApiSource.pageToDf(spark, page, entityType)).cache()
-    try {
-      val (state, _) = store.load(entityType.name, Some(batch.select(col("id"))))
-      val pageObs = new Observation(s"graft-page-${System.nanoTime()}")
-      val observed = batch.observe(pageObs, count(lit(1)).as("rows"), count(col("id")).as("fetched"),
+    val pageObs = new Observation(s"graft-page-${System.nanoTime()}")
+    val observed = ChangeFilter.withContentColumns(EntityApiSource.pageToDf(spark, page, entityType))
+      .observe(pageObs, count(lit(1)).as("rows"), count(col("id")).as("fetched"),
         max(col(Model.UpdatedOnMs)).as("maxUpdatedOnMs"))
-      val newest = StateStores.dedupNewestPerId(ChangeFilter.dropMissingId(observed, "id"))
+    val newest = StateStores.dedupNewestPerId(ChangeFilter.dropMissingId(observed, "id")).cache()
+    try {
+      val (state, _) = store.load(entityType.name, Some(newest.select(col("id"))))
 
       // T1: compile this type's template once into a single Column
       val doc: Column = TemplateCompiler.compileTemplate(
@@ -127,6 +134,6 @@ final class EntityEtlJob(
       log.info(s"${entityType.name}: fetched=$fetched dropped=$dropped " +
         s"emitted=$emitted batches=$batches checkpoint $prevCheckpoint -> $nextCkpt")
       PageStats(fetched, dropped, emitted, batches, nextCkpt)
-    } finally batch.unpersist()
+    } finally newest.unpersist()
   }
 }

@@ -90,6 +90,10 @@ final class EntityStateStore(spark: SparkSession, root: String) {
     * `updatedOnMs` column so intra-page dedup keeps the NEWEST version,
     * matching the reference's last-item-in-page-order overwrite). Other
     * columns are ignored; an already deduplicated batch passes unchanged.
+    * A batch that is already deduplicated and hash-partitioned on `id`,
+    * such as a cached [[StateStores.dedupNewestPerId]] result, commits
+    * without a shuffle of the page: the dedup here and a compaction's
+    * anti-join reuse its partitioning.
     */
   def commit(
       entityType: String,

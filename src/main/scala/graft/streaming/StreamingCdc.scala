@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.types.{MapType, StringType}
 
 /** Structured Streaming formulation of the incremental CDC pipeline
   * (SURVEY.md §1.4, §2.10): the reference's cron'd batch loop maps onto a
@@ -211,6 +212,12 @@ object StreamingCdc {
     * offset, so a crash between send and commit replays the batch
     * (at-least-once, same ordering as the reference app.js:55-58).
     *
+    * The template sees the change's `entity.id`, `entity.updatedOnMs`,
+    * `entity.changeType` and `entity.payload`; any other path resolves like
+    * the batch loop's ([[graft.template.TemplateCompiler.mapResolver]]),
+    * against the payload's top-level keys, so a shipped template's
+    * `{{entity.aws_instance_id}}` renders the entity's value.
+    *
     * Returns a started query; caller owns the lifecycle.
     */
   def loadStream(
@@ -219,15 +226,16 @@ object StreamingCdc {
       senderFactory: graft.sink.HttpBatchSink.SenderFactory,
       maxBatchSize: Int,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    val attrs = graft.template.TemplateCompiler.mapResolver(
+      from_json(col("payload"), MapType(StringType, StringType)))
     val docCol = graft.template.TemplateCompiler.compileTemplate(
       templateText,
-      // changes carry canonical JSON payloads; expose id/type/payload fields
-      path => path match {
+      {
         case "entity.id" => col("id").cast("string")
         case "entity.updatedOnMs" => col("updatedOnMs").cast("string")
         case "entity.changeType" => col("changeType")
         case "entity.payload" => col("payload")
-        case p => lit("") // unknown field -> Handlebars empty-string default
+        case p => attrs(p)
       })
     changes.writeStream
       .option("checkpointLocation", checkpointDir)

@@ -15,6 +15,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeAndComment
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -291,16 +292,20 @@ class PipelineSpec extends SparkSpec {
     // each page: two new ids, one of them twice
     val pages = pageRun(400, 5)((i, ts) =>
       Seq(entity(1000 + 2 * i, "n", ts), entity(1001 + 2 * i, "n", ts), entity(1000 + 2 * i, "m", ts)))
-    val written = new ConcurrentLinkedQueue[Long]()
-    def rowsWritten(plan: SparkPlan): Seq[Long] = plan match {
-      case w: DataWritingCommandExec => Seq(w.cmd.metrics("numOutputRows").value)
-      case a: AdaptiveSparkPlanExec => rowsWritten(a.executedPlan)
-      case q: QueryStageExec => rowsWritten(q.plan)
-      case p => p.children.flatMap(rowsWritten)
+    // each write's row count, with the shuffles its execution planned
+    val written = new ConcurrentLinkedQueue[(Long, Seq[String])]()
+    def planNodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => planNodes(q.plan)
+      case p => p +: p.children.flatMap(planNodes)
     }
     val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        rowsWritten(qe.executedPlan).foreach(written.add(_))
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val nodes = planNodes(qe.executedPlan)
+        nodes.collect { case w: DataWritingCommandExec => w.cmd.metrics("numOutputRows").value }.foreach { rows =>
+          written.add(rows -> nodes.collect { case e: ShuffleExchangeExec => e.simpleString(200) })
+        }
+      }
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     ListenerBusAccess.drain(spark.sparkContext)
@@ -311,7 +316,10 @@ class PipelineSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
     // CompactionShare of 400 rows is 10: four 2-row deltas as the state
     // grows from 400 to 408 rows, then page 5 compacts all 410
-    assert(written.asScala.toSeq == Seq(400L, 2L, 2L, 2L, 2L, 410L))
+    assert(written.asScala.toSeq.map(_._1) == Seq(400L, 2L, 2L, 2L, 2L, 410L))
+    // a delta commit reads the send's cached, deduplicated page without shuffling it again
+    val deltaShuffles = written.asScala.toSeq.slice(1, 5).flatMap(_._2)
+    assert(deltaShuffles.isEmpty, s"the delta commits shuffle: ${deltaShuffles.mkString("; ")}")
     assert(store.load("t")._1.count() == 410 && deltaDirs(root) == 0)
   }
 

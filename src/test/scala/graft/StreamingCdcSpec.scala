@@ -201,7 +201,7 @@ class StreamingCdcSpec extends SparkSpec {
       EntityEvent("8", 2, """{"v":"b"}"""))
     val changes = StreamingCdc.newOrUpdatedStream(input.toDS(), ttlMs = 0)
     val q = StreamingCdc.loadStream(changes,
-      """{"id": "{{entity.id}}", "change": "{{entity.changeType}}", "doc": {{{entity.payload}}}}""",
+      """{"id": "{{entity.id}}", "change": "{{entity.changeType}}", "doc": {{{entity.payload}}}, "v": "{{entity.v}}", "z": "{{entity.z}}"}""",
       PipelineSpec.collectingSender, maxBatchSize = 1,
       Files.createTempDirectory("load-ckpt").toString)
     q.processAllAvailable()
@@ -210,6 +210,8 @@ class StreamingCdcSpec extends SparkSpec {
     assert(bodies.size == 2) // maxBatchSize=1 -> one body per change
     val all = bodies.mkString
     assert(all.contains(""""change": "new"""") && all.contains(""""doc": {"v":"b"}"""))
+    // other entity fields render from the payload's keys, an absent one as ""
+    assert(all.contains(""""v": "a", "z": """"") && all.contains(""""v": "b", "z": """""))
   }
 
   test("dropDuplicatesWithinWatermark suppresses overlap re-fetches") {
