@@ -41,7 +41,7 @@ object SparkEntry {
       spark, store,
       fetch = _ => throw new UnsupportedOperationException("entry() feeds pages directly"),
       entitiesUrlTemplate = "stub://{{type}}?updatedFromMs={{updatedFromMs}}",
-      senderFactory = () => _ => (), // sink stub: accept every batch
+      sender = _ => (), // sink stub: accept every batch
       templates = Map("events" ->
         """{"id": "{{entity.event_id}}", "type": "{{#with entity.event_type}}{{.}}{{else}}unknown{{/with}}", "value": "{{entity.value}}"}"""),
       maxBatchSize = 100)

@@ -41,21 +41,6 @@ object Canonical {
   def canonicalHashExcept(attrs: Column, ignored: Seq[String]): Column =
     sha2(canonicalJsonExcept(attrs, ignored), 256)
 
-  /** Handlebars HTML-escaping of the default double-stash output
-    * (`& < > " ' ` =` — reference templates escape by default; SURVEY.md
-    * §2.4 row E2). Chained regexp_replace keeps it codegen-friendly.
-    * Off by default in the template compiler (documented deviation), exposed
-    * for faithful mode.
-    */
-  def htmlEscape(c: Column): Column = {
-    val repl: Seq[(String, String)] = Seq(
-      "&" -> "&amp;", "<" -> "&lt;", ">" -> "&gt;",
-      "\"" -> "&quot;", "'" -> "&#x27;", "`" -> "&#x60;", "=" -> "&#x3D;")
-    repl.foldLeft(c) { case (acc, (from, to)) =>
-      regexp_replace(acc, java.util.regex.Pattern.quote(from), to)
-    }
-  }
-
   /** Handlebars `#with`-style coalesce: empty string is falsy, so plain
     * coalesce is wrong (SURVEY.md §7.5 risk 2). `nullif(col,'')` first.
     */

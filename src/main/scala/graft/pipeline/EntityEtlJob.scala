@@ -28,7 +28,7 @@ final class EntityEtlJob(
     store: EntityStateStore,
     fetch: Fetcher,
     entitiesUrlTemplate: String,
-    senderFactory: HttpBatchSink.SenderFactory,
+    sender: HttpBatchSink.Sender,
     templates: Map[String, String],
     maxBatchSize: Int = 10000,
     ttlMs: Long = 8L * 3600 * 1000,
@@ -113,7 +113,7 @@ final class EntityEtlJob(
       val batches = HttpBatchSink.send(
         ChangeFilter.newOrUpdated(newest, state)
           .observe(sendObs, count(lit(1)).as("emitted")).select(doc.as("doc")),
-        maxBatchSize, senderFactory, targetBody)
+        maxBatchSize, sender, targetBody)
       val emitted = sendObs.get("emitted").asInstanceOf[Long]
       val counts = pageObs.get
       val rows = counts("rows").asInstanceOf[Long]

@@ -15,18 +15,18 @@ import scala.jdk.CollectionConverters._
   *
   * Shape (two levels, scalars + one headers map per endpoint):
   * {{{
-  * { "logLevel": "info",
-  *   "sfx":    { "server", "headers": {..}, "entitiesTypesEndpoint", "entitiesEndpoint" },
+  * { "sfx":    { "server", "headers": {..}, "entitiesTypesEndpoint", "entitiesEndpoint" },
   *   "target": { "method", "server", "headers": {..}, "entitiesEndpoint", "maxBatchSize" },
   *   "entitiesCacheTtlInHours": 8 }
   * }}}
+  * Any other key is ignored, the reference's `logLevel` among them: log
+  * levels come from the Spark session's logging setup.
   *
   * Header values keep their `{{env.X}}` templates verbatim — resolution
   * stays per-request in the transports (reference http.js:22-28), and
   * construction fails fast if a referenced var is unset at startup.
   */
 final case class EtlConfig(
-    logLevel: String,
     sfxServer: String,
     sfxHeaders: Map[String, String],
     typesEndpoint: String,
@@ -83,7 +83,6 @@ object EtlConfig {
     def headers(endpoint: JsonNode) = endpoint.path("headers").properties.asScala
       .flatMap(e => Json.render(e.getValue).map(e.getKey -> _)).toMap
     EtlConfig(
-      logLevel = str(top, "logLevel", "info"),
       sfxServer = str(sfx, "server", ""),
       sfxHeaders = headers(sfx),
       typesEndpoint = str(sfx, "entitiesTypesEndpoint", "/v2/entities/types"),
@@ -113,7 +112,7 @@ object EtlConfig {
       spark, store,
       fetch = EntityApiSource.httpFetcher(cfg.sfxHeaders, env = env),
       entitiesUrlTemplate = cfg.entitiesUrlTemplate,
-      senderFactory = HttpBatchSink.httpSender(
+      sender = HttpBatchSink.httpSender(
         cfg.targetUrlFor(typeName, envNow), cfg.targetMethod, cfg.targetHeaders, env = env),
       templates = templates,
       maxBatchSize = cfg.maxBatchSize,

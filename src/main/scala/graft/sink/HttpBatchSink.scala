@@ -25,10 +25,24 @@ import java.time.Duration
   */
 object HttpBatchSink {
 
-  /** Pluggable transport: (body) => (). Must throw on failure (fail-fast,
-    * reference http.js:19). Instantiated per partition on the executor.
+  /** Posts one batch body; must throw on failure (fail-fast, reference
+    * http.js:19). It runs inside the send's tasks, so it must serialize.
     */
-  type SenderFactory = () => String => Unit
+  type Sender = String => Unit
+
+  /** Timeout of every request, its connect included. */
+  private val Timeout = Duration.ofSeconds(60)
+
+  /** The JVM's one HTTP client, built on first use: each executor JVM builds
+    * its own, and the driver's fetcher shares the driver's. Its pool keeps
+    * connections open across partitions and pages; a pooled connection the
+    * server closes leaves the pool when its close arrives.
+    *
+    * No connect timeout: with one set, the JDK 17 client keeps the request
+    * that opened a pooled connection, body included, reachable for the
+    * connection's life. The request timeout already bounds the connect.
+    */
+  private lazy val client: HttpClient = HttpClient.newHttpClient()
 
   /** Header VALUES are templates re-rendered against `env()` on every
     * request (reference http.js:22-28): `Authorization: Bearer {{env.TOKEN}}`
@@ -44,143 +58,48 @@ object HttpBatchSink {
     * wherever the request runs.
     */
   def httpSender(url: String, method: String, headers: Map[String, String],
-                 timeout: Duration = Duration.ofSeconds(60),
-                 env: () => Map[String, String] = { val snap = sys.env; () => snap }): SenderFactory = {
-    val transport = httpTransport(method, headers, timeout, env)
-    () => { val send = transport(); body => send(url, Nil, Some(body)) }
+                 env: () => Map[String, String] = { val snap = sys.env; () => snap }): Sender = {
+    val request = httpTransport(method, headers, env)
+    body => request(url, Some(body))
   }
 
-  /** Keyed transport for effectively-once delivery:
-    * (idempotencyKey, body) => Unit. Must throw on failure.
-    */
-  type KeyedSenderFactory = () => (String, String) => Unit
-
-  /** [[httpSender]] that also stamps each request with its batch's
-    * idempotency key in `keyHeader` (the `Idempotency-Key` convention) —
-    * the transport half of [[sendIdempotent]].
-    */
-  def httpKeyedSender(url: String, method: String, headers: Map[String, String],
-                      keyHeader: String = "Idempotency-Key",
-                      timeout: Duration = Duration.ofSeconds(60),
-                      env: () => Map[String, String] = { val snap = sys.env; () => snap })
-    : KeyedSenderFactory = {
-    val transport = httpTransport(method, headers, timeout, env)
-    () => { val send = transport(); (key, body) => send(url, Seq(keyHeader -> key), Some(body)) }
-  }
-
-  /** The one request builder behind both transports and
-    * [[graft.source.EntityApiSource.httpFetcher]]: (url, extra headers,
-    * body) => response body, one client per call of the factory (per
-    * partition for the senders). Header templates render per request; no
+  /** The one request builder behind [[httpSender]] and
+    * [[graft.source.EntityApiSource.httpFetcher]]: (url, body) => response
+    * body over the JVM's client. Header templates render per request; no
     * body sends none; a non-2xx response throws.
     */
   private[graft] def httpTransport(method: String, headers: Map[String, String],
-                                   timeout: Duration, env: () => Map[String, String])
-    : () => (String, Seq[(String, String)], Option[String]) => String = {
+                                   env: () => Map[String, String]): (String, Option[String]) => String = {
     // construction-time fail-fast: malformed header templates and env vars
     // missing at startup are config errors, not per-request 401s
     graft.template.TemplateCompiler.validateHeaderTemplates(headers, env())
-    () => {
-      val client = HttpClient.newBuilder().connectTimeout(timeout).build()
-      (url, extra, body) => {
-        val b = HttpRequest.newBuilder(URI.create(url)).timeout(timeout)
-          .method(method, body.fold(HttpRequest.BodyPublishers.noBody())(HttpRequest.BodyPublishers.ofString))
-        val e = env()
-        headers.foreach { case (k, v) =>
-          b.header(k, graft.template.TemplateCompiler.renderWithEnv(v, Map.empty, e))
-        }
-        extra.foreach { case (k, v) => b.header(k, v) }
-        val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
-        require(resp.statusCode / 100 == 2, s"$method $url -> HTTP ${resp.statusCode}")
-        resp.body()
+    (url, body) => {
+      val b = HttpRequest.newBuilder(URI.create(url)).timeout(Timeout)
+        .method(method, body.fold(HttpRequest.BodyPublishers.noBody())(HttpRequest.BodyPublishers.ofString))
+      val e = env()
+      headers.foreach { case (k, v) =>
+        b.header(k, graft.template.TemplateCompiler.renderWithEnv(v, Map.empty, e))
       }
+      val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+      require(resp.statusCode / 100 == 2, s"$method $url -> HTTP ${resp.statusCode}")
+      resp.body()
     }
   }
 
-  /** Send `docs` (a single string column of rendered documents) in batches.
-    * Skips empty input without a request (reference app.js:89-91).
+  /** Send `docs` (a single string column of rendered documents) in batches:
+    * each partition posts its rows in <=maxBatchSize chunks, and an empty
+    * partition posts nothing (reference app.js:89-91). targetBody is
+    * replaceable data like every other template (reference templates.js:43,
+    * app.js:106); the default is the shipped targetBody.hbs:2 shape as a
+    * plain mkString.
     *
     * @return number of batches sent (driver-visible, via accumulator).
     *         Task retries re-send AND re-count — the value can exceed
     *         ceil(n/maxBatchSize) under failures, consistent with the
     *         at-least-once delivery contract (W2).
     */
-  def send(docs: DataFrame, maxBatchSize: Int, senderFactory: SenderFactory,
-           targetBody: Option[String] = None): Long =
-    sendBatches(docs, maxBatchSize, targetBody) { () =>
-      val send = senderFactory()
-      (_, body) => send(body)
-    }
-
-  /** The at-least-once → EFFECTIVELY-ONCE upgrade the reference's design
-    * keeps promising and never ships ("the idempotent target method makes
-    * it effectively-once", README-level W2 discussion): every batch
-    * carries a DETERMINISTIC idempotency key
-    * `sha256(context ⊕ slice position ⊕ batch body)`, so a target that records applied
-    * keys (the standard `Idempotency-Key` contract) applies each batch
-    * exactly once however many times a Spark task retry, a crashed run's
-    * replay from the uncommitted checkpoint, or a duplicate page re-sends
-    * it.
-    *
-    * `context` should name the UNIT OF REPLAY — `s"$entityType:$checkpoint"`
-    * — so re-sends of the same page under the same checkpoint collide (as
-    * they must) while a later incremental pass with a new checkpoint never
-    * collides with history. The slice identity inside the page is the
-    * batch CONTENT hash mixed with the batch's (partition id, ordinal):
-    * content alone would alias two DISTINCT batches with identical bodies
-    * under one checkpoint — an idempotency-honoring APPEND target would
-    * apply only one, silent loss, the failure mode this key must never
-    * have — while position alone would collide across checkpoints.
-    *
-    * The replay-collision guarantee, stated honestly: keys collide across
-    * task retries and whole-run replays whenever the replay re-plans
-    * IDENTICALLY — deterministic upstream plan AND the same partitioning
-    * (parallelism, `spark.sql.files.maxPartitionBytes`, upstream file
-    * layout unchanged), which is what a Spark task retry and a same-config
-    * crash replay give. A replay that re-plans with DIFFERENT partitioning
-    * re-slices the page into different batches (different bodies — there
-    * is nothing batch-grained left to collide), so its keys are fresh and
-    * delivery for the overlapping content degrades to the documented
-    * at-least-once floor; an idempotent target needs row-grained dedup to
-    * absorb that case. Positional mixing is the safe side of this
-    * trade-off: the alternative (content-only keys) turns the same
-    * re-planned replay into silent LOSS instead of duplicates. Against a
-    * target that ignores the key entirely, delivery is plain
-    * at-least-once — never worse.
-    */
-  def sendIdempotent(docs: DataFrame, maxBatchSize: Int,
-                     senderFactory: KeyedSenderFactory, context: String,
-                     targetBody: Option[String] = None): Long =
-    sendBatches(docs, maxBatchSize, targetBody) { () =>
-      val send = senderFactory()
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      // (partition id, batch ordinal) ride the key alongside the body
-      // hash: two DISTINCT batches with identical bodies under one
-      // checkpoint must not share a key (an idempotency-honoring
-      // append target would apply only one — silent loss). Both are
-      // stable across task retries for a deterministic plan, so
-      // replays still collide as the contract requires.
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      (ordinal, body) => {
-        md.reset()
-        md.update(context.getBytes("UTF-8"))
-        md.update(0.toByte) // unambiguous context/body separator
-        md.update(s"$pid:$ordinal".getBytes("UTF-8"))
-        md.update(0.toByte)
-        md.update(body.getBytes("UTF-8"))
-        send(md.digest().map("%02x".format(_)).mkString, body)
-      }
-    }
-
-  /** The one batching loop behind [[send]] and [[sendIdempotent]]: each
-    * non-empty partition opens one poster (ordinal, body) => Unit and posts
-    * its rows in <=maxBatchSize chunks. targetBody is replaceable data like
-    * every other template (reference templates.js:43, app.js:106); the
-    * default fast path is the shipped targetBody.hbs:2 semantics as a plain
-    * mkString.
-    */
-  private def sendBatches(docs: DataFrame, maxBatchSize: Int, targetBody: Option[String])
-                         (open: () => (Long, String) => Unit): Long = {
+  def send(docs: DataFrame, maxBatchSize: Int, sender: Sender,
+           targetBody: Option[String] = None): Long = {
     require(maxBatchSize > 0, "maxBatchSize must be positive")
     val sent: LongAccumulator = docs.sparkSession.sparkContext.longAccumulator("graft.batchesSent")
     val assemble: Seq[String] => String = targetBody match {
@@ -189,12 +108,9 @@ object HttpBatchSink {
     }
     docs.select(col(docs.columns.head).cast("string")).foreachPartition {
       (it: Iterator[org.apache.spark.sql.Row]) =>
-        if (it.hasNext) {
-          val post = open()
-          it.map(_.getString(0)).grouped(maxBatchSize).zipWithIndex.foreach { case (chunk, i) =>
-            post(i.toLong, assemble(chunk))
-            sent.add(1)
-          }
+        it.map(_.getString(0)).grouped(maxBatchSize).foreach { chunk =>
+          sender(assemble(chunk))
+          sent.add(1)
         }
     }
     sent.value

@@ -6,7 +6,6 @@ import graft.model.{EntityType, Model}
 import graft.sink.HttpBatchSink
 import graft.template.TemplateCompiler
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.time.Duration
 import scala.jdk.CollectionConverters._
 
 /** Incremental entity source (SURVEY.md §2 rows S1-S3, §2.10 W1/W4).
@@ -43,13 +42,12 @@ object EntityApiSource {
   /** Header VALUES are templates re-rendered against the live env on every
     * request (reference http.js:22-28 renders `{{env.X}}` per request, so a
     * token rotated mid-run takes effect on the next page fetch). `env` is
-    * read per request; injectable for tests.
+    * read per request; injectable for tests. Requests go through the JVM's
+    * one client, shared with the sink ([[HttpBatchSink.httpTransport]]).
     */
-  def httpFetcher(headers: Map[String, String], timeout: Duration = Duration.ofSeconds(60),
-                  env: () => Map[String, String] = () => sys.env): Fetcher = {
-    val transport = HttpBatchSink.httpTransport("GET", headers, timeout, env)
-    lazy val send = transport()
-    url => send(url, Nil, None)
+  def httpFetcher(headers: Map[String, String], env: () => Map[String, String] = () => sys.env): Fetcher = {
+    val request = HttpBatchSink.httpTransport("GET", headers, env)
+    url => request(url, None)
   }
 
   /** GET the type catalog `{name, uniqueIdField}[]` (reference app.js:71-74).

@@ -118,31 +118,6 @@ final class EntityStateStore(spark: SparkSession, root: String) {
       }
   }
 
-  /** K5: MERGE-style multi-action commit ([[Merge.merge]]) — one commit
-    * applying upserts AND tombstone deletes in a single plan. `batch`
-    * carries the K2 columns plus `op`: "delete" rows REMOVE their id from
-    * state (physical delete — the compaction makes it durable), anything
-    * else upserts with a fresh TTL exactly like [[commit]]. Page-internal
-    * ordering is the same LWW dedup: the newest ACTION per id wins,
-    * whether version or tombstone (a delete followed by a newer upsert in
-    * one page upserts; the reverse deletes). It reads the merged state and
-    * always commits as a compaction; TTL eviction and checkpoint semantics
-    * are unchanged.
-    */
-  def commitMerge(
-      entityType: String,
-      batch: DataFrame,
-      nowMs: Long,
-      ttlMs: Long,
-      newCheckpoint: Long): Unit = {
-    val actions = StateStores.dedupNewestPerId(batch)
-      .select(col("id"), clock(nowMs + ttlMs).as("ttl"), col("entityJson"),
-        col("entityHash"), col("op"))
-    val live = view(generations(entityType), None).where(col("ttl") >= clock(nowMs)) // F4 eviction
-    compact(entityType, Merge.merge(live, actions, "id", "op", Seq("ttl", "entityJson", "entityHash")),
-      newCheckpoint, nowMs)
-  }
-
   /** The committed generations of a type, base first; empty when the type
     * has no state. Recovers an interrupted commit first.
     */

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * whether it is a version or a tombstone).
   *
   * Delete semantics are physical: a tombstoned key simply leaves the
-  * result (the caller swaps the table, [[EntityStateStore.commitMerge]]).
+  * result (the caller writes it as the new state).
   * An unmatched delete is a no-op, matching MERGE. Any `op` other than
   * "delete" upserts — the two-verb contract keeps the case-action
   * projection total.

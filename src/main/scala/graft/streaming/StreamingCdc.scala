@@ -73,8 +73,7 @@ object StreamingCdc {
   final case class Action(id: String, updatedOnMs: Long, op: String, payload: String)
 
   /** K5 streaming — MERGE with tombstones through the CDC state (the
-    * stream form of [[graft.state.Merge.merge]] /
-    * [[graft.state.EntityStateStore.commitMerge]]): an upsert is "new" or
+    * stream form of [[graft.state.Merge.merge]]): an upsert is "new" or
     * "updated" iff its content hash differs from state. State carries
     * (updatedOnMs, hash): a late version OLDER than the applied one is
     * suppressed, not written over the target. A suppressed row rewrites
@@ -223,7 +222,7 @@ object StreamingCdc {
   def loadStream(
       changes: Dataset[Change],
       templateText: String,
-      senderFactory: graft.sink.HttpBatchSink.SenderFactory,
+      sender: graft.sink.HttpBatchSink.Sender,
       maxBatchSize: Int,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val attrs = graft.template.TemplateCompiler.mapResolver(
@@ -241,7 +240,7 @@ object StreamingCdc {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Change], _: Long) =>
         graft.sink.HttpBatchSink.send(
-          batch.toDF().select(docCol.as("doc")), maxBatchSize, senderFactory)
+          batch.toDF().select(docCol.as("doc")), maxBatchSize, sender)
         () // commit happens after this returns (send-before-commit, W2)
       }
       .start()

@@ -1,6 +1,5 @@
 package graft.template
 
-import graft.functions.Canonical
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -15,9 +14,10 @@ import scala.jdk.CollectionConverters._
   *
   * Supported constructs — the complete scalar surface of the 20 shipped
   * templates (SURVEY.md §2.4, rows E1-E8):
-  *   - `{{entity.x}}`            field access, missing/null -> "" (E1), with
-  *                               optional HTML escaping (E2, default off)
-  *   - `{{{entity.x}}}`          raw (unescaped) emit (E8)
+  *   - `{{entity.x}}`            field access, missing/null -> "" (E1); no
+  *                               HTML escaping (E2, a documented deviation:
+  *                               the documents are JSON bodies)
+  *   - `{{{entity.x}}}`          the same emit (E8)
   *   - `{{#with entity.x}}body{{else}}fallback{{/with}}`
   *                               coalesce-with-default; Handlebars treats ""
   *                               as falsy, so empty string takes the fallback
@@ -33,7 +33,7 @@ object TemplateCompiler {
 
   sealed trait Part
   final case class Lit(s: String) extends Part
-  final case class Field(path: String, raw: Boolean) extends Part
+  final case class Field(path: String) extends Part
   final case class With(path: String, body: Seq[Part], fallback: Seq[Part]) extends Part
 
   /** Resolve a template path to a Column. `entity.`-prefixed paths hit the
@@ -98,7 +98,7 @@ object TemplateCompiler {
         if (s.startsWith("{{{")) {
           val end = s.indexOf("}}}")
           require(end > 0, s"unterminated raw stash: ${s.take(40)}")
-          parts += Field(s.substring(3, end).trim, raw = true)
+          parts += Field(s.substring(3, end).trim)
           s = s.substring(end + 3)
         } else {
           val end = s.indexOf("}}")
@@ -124,7 +124,7 @@ object TemplateCompiler {
             // one block construct the reference templates use (E3).
             require(!tag.startsWith("#") && !tag.startsWith("/"),
               s"unsupported block helper '{{$tag}}' (only #with/else is implemented)")
-            parts += Field(tag, raw = false)
+            parts += Field(tag)
             s = s.substring(end + 2)
           }
         }
@@ -142,15 +142,11 @@ object TemplateCompiler {
   // -------------------------------------------------------------- compiling
 
   /** Compile a parsed template to one string-valued Column. */
-  def compile(parts: Seq[Part], resolve: Resolver, escapeHtml: Boolean = false): Column = {
+  def compile(parts: Seq[Part], resolve: Resolver): Column = {
     def emit(p: Part, ctx: Option[Column]): Column = p match {
       case Lit(s) => lit(s)
-      case Field(".", raw) =>
-        val c = ctx.getOrElse(lit(""))
-        if (escapeHtml && !raw) Canonical.htmlEscape(c) else c
-      case Field(path, raw) =>
-        val c = resolve(path)
-        if (escapeHtml && !raw) Canonical.htmlEscape(c) else c
+      case Field(".") => ctx.getOrElse(lit(""))
+      case Field(path) => resolve(path)
       case With(path, body, fb) =>
         val tested = resolve(path)
         val bodyC = concatAll(body.map(emit(_, Some(tested))))
@@ -165,8 +161,8 @@ object TemplateCompiler {
     if (cs.isEmpty) lit("") else if (cs.size == 1) cs.head else concat(cs: _*)
 
   /** One-shot: template text -> rendered-document Column. */
-  def compileTemplate(template: String, resolve: Resolver, escapeHtml: Boolean = false): Column =
-    compile(parse(template), resolve, escapeHtml)
+  def compileTemplate(template: String, resolve: Resolver): Column =
+    compile(parse(template), resolve)
 
   /** Driver-side render for URL/header templating (E10): same parser, plain
     * string interpolation against a value map — no DataFrame involved.
@@ -174,8 +170,8 @@ object TemplateCompiler {
   def renderString(template: String, values: Map[String, String]): String = {
     def emit(p: Part, ctx: Option[String]): String = p match {
       case Lit(s)            => s
-      case Field(".", _)     => ctx.getOrElse("")
-      case Field(path, _)    => values.getOrElse(path, values.getOrElse(path.stripPrefix("entity."), ""))
+      case Field(".")        => ctx.getOrElse("")
+      case Field(path)       => values.getOrElse(path, values.getOrElse(path.stripPrefix("entity."), ""))
       case With(path, b, fb) =>
         val v = values.getOrElse(path, values.getOrElse(path.stripPrefix("entity."), ""))
         if (v.nonEmpty) b.map(emit(_, Some(v))).mkString else fb.map(emit(_, ctx)).mkString
@@ -200,7 +196,7 @@ object TemplateCompiler {
     */
   def envRefs(template: String): Seq[String] = {
     def collect(ps: Seq[Part]): Seq[String] = ps.flatMap {
-      case Field(p, _) if p.startsWith("env.") => Seq(p.stripPrefix("env."))
+      case Field(p) if p.startsWith("env.") => Seq(p.stripPrefix("env."))
       case With(p, b, fb) =>
         (if (p.startsWith("env.")) Seq(p.stripPrefix("env.")) else Nil) ++ collect(b) ++ collect(fb)
       case _ => Nil

@@ -62,7 +62,7 @@ object FaultyFileSystem {
 object CommitFaultSpec {
   // static collector: executors share the JVM in local mode
   val sent = new ConcurrentLinkedQueue[String]()
-  def recordingSender: HttpBatchSink.SenderFactory = () => body => sent.add(body)
+  def recordingSender: HttpBatchSink.Sender = body => sent.add(body)
 }
 
 /** Every crash point of the two on-disk commits ends in a replay, never in
@@ -100,7 +100,7 @@ class CommitFaultSpec extends SparkSpec {
     }
     new EntityEtlJob(spark, new EntityStateStore(spark, root), fetch,
       entitiesUrlTemplate = "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}",
-      senderFactory = recordingSender,
+      sender = recordingSender,
       templates = Map("t" -> """{"id": "{{entity.id}}", "x": "{{entity.x}}"}"""),
       maxBatchSize = 10, ttlMs = 1000000, now = () => 5000).runType(entityType)
   }

@@ -273,7 +273,7 @@ class EntitySourceV2Spec extends SparkSpec {
             java.nio.file.Files.createTempDirectory("v2walk").toString)
           new graft.pipeline.EntityEtlJob(spark, store, new CountingFetcherFactory().fetcher(Map.empty),
             entitiesUrlTemplate = "stub://e?type={{type}}&updatedFromMs={{updatedFromMs}}",
-            senderFactory = () => _ => (), templates = Map("widget" -> tpl))
+            sender = _ => (), templates = Map("widget" -> tpl))
             .runType(EntityType("widget", "uid"))
         }
         assert(viaReader == expected)

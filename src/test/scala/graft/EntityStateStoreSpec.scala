@@ -145,39 +145,6 @@ class EntityStateStoreSpec extends SparkSpec {
     assert(kept == Seq("zzz-new"))
   }
 
-  test("K5 commitMerge tombstone round-trip: delete + update + insert in one commit") {
-    val store = freshStore()
-    store.commit("t", batch("a" -> "h1", "b" -> "h2", "c" -> "h3"),
-      nowMs = 1000, ttlMs = 1000, newCheckpoint = 1, pageRows = 3)
-    // one merge page: tombstone a, update b, insert d (c untouched)
-    val actions = Seq(("a", "{}", "x", "delete"), ("b", "{}", "h2b", "upsert"),
-        ("d", "{}", "h4", "upsert"))
-      .toDF("id", "entityJson", "entityHash", "op")
-    store.commitMerge("t", actions, nowMs = 1100, ttlMs = 1000, newCheckpoint = 2)
-    val (df, ckpt) = store.load("t")
-    assert(ckpt == 2)
-    val m = df.select("id", "entityHash").as[(String, String)].collect().toMap
-    assert(m == Map("b" -> "h2b", "c" -> "h3", "d" -> "h4"),
-      s"merge applied wrong state: $m")
-    // unmatched delete is a no-op; newest action per id wins inside a page
-    // (delete then newer upsert -> upsert; upsert then newer delete -> gone)
-    val page2 = Seq(
-        ("zz", "{}", "x", 10L, "delete"),          // unmatched delete: no-op
-        ("d", "{}", "d-old", 10L, "delete"),       // older tombstone...
-        ("d", "{}", "d-new", 20L, "upsert"),       // ...loses to newer upsert
-        ("c", "{}", "c-old", 10L, "upsert"),       // older upsert...
-        ("c", "{}", "c-new", 20L, "delete"))       // ...loses to newer tombstone
-      .toDF("id", "entityJson", "entityHash", "updatedOnMs", "op")
-    store.commitMerge("t", page2, nowMs = 1200, ttlMs = 1000, newCheckpoint = 3)
-    val m2 = store.load("t")._1.select("id", "entityHash").as[(String, String)].collect().toMap
-    assert(m2 == Map("b" -> "h2b", "d" -> "d-new"), s"page-2 state wrong: $m2")
-    // TTL eviction still applies in the merge commit
-    store.commitMerge("t", Seq(("e", "{}", "h5", "upsert")).toDF("id", "entityJson", "entityHash", "op"),
-      nowMs = 5000, ttlMs = 1000, newCheckpoint = 4)
-    val m3 = store.load("t")._1.select("id").as[String].collect().toSet
-    assert(m3 == Set("e"), s"stale rows must evict: $m3")
-  }
-
   test("K3 SCD2 history: half-open intervals chain per key; current slice == LWW head") {
     import graft.state.Scd2
     val versions = Seq(

@@ -21,11 +21,7 @@ object HttpLoopbackSpec {
   val tokens = new ConcurrentLinkedQueue[String]() // X-Token header per request
   @volatile var failPuts = false
   @volatile var liveToken = "tok-1" // simulated rotating credential
-  // idempotent-target state: applied bodies keyed by Idempotency-Key; a
-  // replayed key ACKs 200 without re-applying (the standard contract)
-  val applied = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val keyedRequests = new ConcurrentLinkedQueue[String]() // every key seen
-  @volatile var failAfterFirstApply = false
+  val loadPorts = new ConcurrentLinkedQueue[Int]() // client port per /load request
 }
 
 class HttpLoopbackSpec extends SparkSpec {
@@ -63,27 +59,11 @@ class HttpLoopbackSpec extends SparkSpec {
     server.createContext("/load", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         Option(ex.getRequestHeaders.getFirst("X-Token")).foreach(tokens.add)
+        loadPorts.add(ex.getRemoteAddress.getPort)
         val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
         if (failPuts) { ex.sendResponseHeaders(503, -1); ex.close() }
         else {
           received.add((ex.getRequestMethod, body))
-          ex.sendResponseHeaders(200, -1); ex.close()
-        }
-      }
-    })
-    server.createContext("/load-idem", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val key = Option(ex.getRequestHeaders.getFirst("Idempotency-Key")).getOrElse("")
-        val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-        keyedRequests.add(key)
-        if (applied.containsKey(key)) {
-          // replayed batch: acknowledge, do NOT re-apply
-          ex.sendResponseHeaders(200, -1); ex.close()
-        } else if (failAfterFirstApply && applied.size() >= 1) {
-          // injected mid-page failure: the SECOND distinct batch 503s
-          ex.sendResponseHeaders(503, -1); ex.close()
-        } else {
-          applied.put(key, body)
           ex.sendResponseHeaders(200, -1); ex.close()
         }
       }
@@ -102,7 +82,7 @@ class HttpLoopbackSpec extends SparkSpec {
       val store = new EntityStateStore(spark, Files.createTempDirectory("http-e2e").toString)
       val job = new EntityEtlJob(spark, store, fetch,
         entitiesUrlTemplate = s"http://127.0.0.1:$port/v2/entities?type={{type}}&updatedFromMs={{updatedFromMs}}",
-        senderFactory = HttpBatchSink.httpSender(s"http://127.0.0.1:$port/load", "PUT", Map("X-Token" -> "t")),
+        sender = HttpBatchSink.httpSender(s"http://127.0.0.1:$port/load", "PUT", Map("X-Token" -> "t")),
         templates = Map("widget" -> """{"id": "{{entity.uid}}", "color": "{{entity.color}}"}"""),
         maxBatchSize = 10)
       val stats = job.run(types)("widget")
@@ -157,43 +137,15 @@ class HttpLoopbackSpec extends SparkSpec {
     }
   }
 
-  test("idempotent-key sink: replay after mid-page failure applies every batch exactly once (W2 upgrade)") {
+  test("one client per JVM: sequential sends reuse one connection") {
     import spark.implicits._
-    applied.clear(); keyedRequests.clear()
+    loadPorts.clear(); failPuts = false
     withServer { port =>
-      val sender = HttpBatchSink.httpKeyedSender(
-        s"http://127.0.0.1:$port/load-idem", "PUT", Map.empty)
-      // one page = 4 docs in 2 batches of 2; context = type + checkpoint
-      // (the unit of replay)
-      val docs = Seq("""{"id":"1"}""", """{"id":"2"}""", """{"id":"3"}""", """{"id":"4"}""")
-        .toDF("doc").coalesce(1)
-      val ctx = "widget:200"
-
-      // attempt 1: batch 1 applies, batch 2 hits the injected 503 → the
-      // send (and the run's commit) fails, checkpoint stays — the
-      // reference's crash-before-commit shape
-      failAfterFirstApply = true
-      intercept[Exception] { HttpBatchSink.sendIdempotent(docs, 2, sender, ctx) }
-      assert(applied.size() == 1)
-
-      // attempt 2 (the replay from the uncommitted checkpoint): batch 1's
-      // key collides → ACKed without re-applying; batch 2 applies
-      failAfterFirstApply = false
-      val n = HttpBatchSink.sendIdempotent(docs, 2, sender, ctx)
-      assert(n == 2)
-      assert(applied.size() == 2, "each batch applied EXACTLY once across the replay")
-      val allApplied = applied.values().asScala.mkString
-      assert(Seq("1", "2", "3", "4").forall(i => allApplied.contains(s"""{"id":"$i"}""")))
-      // the wire saw each batch twice (batch 2's first attempt reached the
-      // server and 503'd; at-least-once delivery is unchanged) but only
-      // TWO distinct keys — the key is what suppressed the duplicate apply
-      val k = keyedRequests.asScala.toSeq
-      assert(k.size == 4 && k.distinct.size == 2)
-
-      // a LATER page (new checkpoint) with identical content must NOT
-      // collide with history: keys namespace by context
-      val n2 = HttpBatchSink.sendIdempotent(docs, 2, sender, "widget:300")
-      assert(n2 == 2 && applied.size() == 4)
+      val sender = HttpBatchSink.httpSender(s"http://127.0.0.1:$port/load", "PUT", Map.empty)
+      val docs = Seq("""{"id":"1"}""").toDF("doc").coalesce(1)
+      (1 to 3).foreach(_ => assert(HttpBatchSink.send(docs, 10, sender) == 1))
+      val ports = loadPorts.asScala.toSeq
+      assert(ports.size == 3 && ports.distinct.size == 1, s"client ports per PUT: $ports")
     }
   }
 
@@ -204,7 +156,7 @@ class HttpLoopbackSpec extends SparkSpec {
       val store = new EntityStateStore(spark, Files.createTempDirectory("http-e2e2").toString)
       val job = new EntityEtlJob(spark, store, fetch,
         entitiesUrlTemplate = s"http://127.0.0.1:$port/v2/entities?type={{type}}&updatedFromMs={{updatedFromMs}}",
-        senderFactory = HttpBatchSink.httpSender(s"http://127.0.0.1:$port/load", "PUT", Map.empty),
+        sender = HttpBatchSink.httpSender(s"http://127.0.0.1:$port/load", "PUT", Map.empty),
         templates = Map("widget" -> """{"id": "{{entity.uid}}"}"""),
         maxBatchSize = 10)
       intercept[Exception] { job.runType(EntityType("widget", "uid")) }

@@ -207,15 +207,14 @@ class SourceSinkSpec extends SparkSpec {
   test("sink: ceil(n/max) batches per partition, [a,b] body shape, empty skipped") {
     bodies.clear()
     val docs = (1 to 5).map(i => s"""{"i":$i}""").toDF("doc").coalesce(1)
-    val sent = HttpBatchSink.send(docs, maxBatchSize = 2,
-      () => b => SourceSinkSpec.bodies.add(b))
+    val sent = HttpBatchSink.send(docs, maxBatchSize = 2, b => SourceSinkSpec.bodies.add(b))
     assert(sent == 3) // ceil(5/2)
     val bs = bodies.asScala.toSeq
     assert(bs.forall(b => b.startsWith("[{") && b.endsWith("}]")))
     assert(bs.map(b => b.count(_ == '{')).sum == 5)
 
     bodies.clear()
-    val none = HttpBatchSink.send(docs.limit(0), 2, () => b => SourceSinkSpec.bodies.add(b))
+    val none = HttpBatchSink.send(docs.limit(0), 2, b => SourceSinkSpec.bodies.add(b))
     assert(none == 0 && bodies.isEmpty) // skip-empty, app.js:89-91
   }
 }

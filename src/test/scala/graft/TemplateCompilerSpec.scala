@@ -13,9 +13,9 @@ class TemplateCompilerSpec extends SparkSpec {
   import spark.implicits._
 
   private def render(tpl: String, entity: Map[String, String],
-                     env: Map[String, String] = Map.empty, escape: Boolean = false): String =
+                     env: Map[String, String] = Map.empty): String =
     Seq(entity).toDF("attrs")
-      .select(TemplateCompiler.compileTemplate(tpl, mapResolver(col("attrs"), env), escape).as("doc"))
+      .select(TemplateCompiler.compileTemplate(tpl, mapResolver(col("attrs"), env)).as("doc"))
       .head().getString(0)
 
   // The awsElb-shaped golden pair (reference test/templates.test.js:24-43):
@@ -49,10 +49,9 @@ class TemplateCompilerSpec extends SparkSpec {
     assert(out == "AWS Lambda/java17 v2")
   }
 
-  test("escaping: default-off keeps raw; escape mode escapes stash but not triple-stash (E2/E8)") {
+  test("no HTML escaping: stash and triple-stash both emit raw (E2/E8)") {
     val e = Map("x" -> "a&b", "y" -> "c<d")
     assert(render("""{{entity.x}}|{{{entity.y}}}""", e) == "a&b|c<d")
-    assert(render("""{{entity.x}}|{{{entity.y}}}""", e, escape = true) == "a&amp;b|c<d")
   }
 
   test("env substitution (E9) resolves at compile time") {
